@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.tables import load_table
+from .sources.tables import load_table, local_frame
 
 # One template, two dialects. Placeholders:
 #   {STR}    -> STRING (Spark) / VARCHAR (DuckDB)
@@ -88,7 +88,11 @@ def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Enrichment dimensions (broadcast-join side; geoip/k8sattributes analog,
 # `processor/geoipprocessor/geoip_processor.go:29-94`). Small, static,
 # driver-defined. 'tool' value 'sql' is intentionally absent from TOOL_DIM to
-# exercise left-join null handling + upsert defaults.
+# exercise left-join null handling + upsert defaults. Built with
+# tables.local_frame, so they plan as LocalTableScan: the JVM broadcasts the
+# rows straight from the plan, with no Python worker and no extra job per
+# query. The schemas are the ones createDataFrame(rows, cols) would infer
+# (pinned in tests/test_plans.py).
 # ---------------------------------------------------------------------------
 
 ROLE_DIM_ROWS = [
@@ -98,6 +102,7 @@ ROLE_DIM_ROWS = [
     ("tool", "machine", False, 4),
 ]
 ROLE_DIM_COLS = ["role", "role_kind", "is_human", "priority"]
+ROLE_DIM_SCHEMA = "role string, role_kind string, is_human boolean, priority bigint"
 
 TOOL_DIM_ROWS = [
     ("search", "retrieval", "platform"),
@@ -106,14 +111,15 @@ TOOL_DIM_ROWS = [
     ("", "none", "none"),
 ]
 TOOL_DIM_COLS = ["tool", "tool_category", "tool_owner"]
+TOOL_DIM_SCHEMA = "tool string, tool_category string, tool_owner string"
 
 
 def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DIM_ROWS, ROLE_DIM_COLS)
+    return local_frame(spark, ROLE_DIM_ROWS, ROLE_DIM_SCHEMA)
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_DIM_ROWS, TOOL_DIM_COLS)
+    return local_frame(spark, TOOL_DIM_ROWS, TOOL_DIM_SCHEMA)
 
 
 def _values_sql(rows, cols, quote=repr) -> str:

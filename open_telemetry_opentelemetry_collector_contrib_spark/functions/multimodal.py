@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -55,7 +57,7 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
         rows.append(
             (i, kind, bytearray(payload), 64 + i % 32, 64, 1000 + i, "fake")
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _stub_feature(payload: bytes) -> list[float]:

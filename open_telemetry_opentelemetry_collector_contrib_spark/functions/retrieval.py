@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame, materialize
+
 # idf_ppm cap: keeps idf_ppm * tfpart_ppm (< 2.26e6) inside int64 even for
 # a term seen once in ~4e12 docs; beyond that BM25's rare-term preference
 # is already saturated for ranking purposes.
@@ -66,8 +68,6 @@ def bm25_topk(
 
     Output: (query_id, doc_id, rank, n_terms_matched, score).
     """
-    from ..sources.tables import materialize
-
     toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
     # tokenized corpus feeds both the global stats aggregate and the
     # postings explode — materialize so the scan+tokenize runs once (r6)
@@ -160,4 +160,4 @@ def bm25_topk(
 
 def literal_queries(spark: SparkSession, rows: list[tuple[int, str]]) -> DataFrame:
     """Tiny literal (query_id, query_text) frame for deterministic tests."""
-    return spark.createDataFrame(rows, "query_id bigint, query_text string")
+    return local_frame(spark, rows, "query_id bigint, query_text string")

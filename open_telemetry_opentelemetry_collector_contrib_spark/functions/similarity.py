@@ -33,22 +33,35 @@ def _nearest_centroid_udf(centroids: list[list[float]]):
     from pyspark.sql.functions import pandas_udf
 
     cents = np.array(centroids, dtype=np.float64)
+    dim = cents.shape[1]
 
     # no type hints: `from __future__ import annotations` stringifies them,
     # which pyspark's eval-type inference can't resolve — explicit SCALAR
-    # form (same convention as dedupe._minhash_signatures_pandas)
+    # form (same convention as dedupe._minhash_signatures_pandas).
+    # A null vector, a vector of the wrong length, or one with a null
+    # element (Arrow hands it over as NaN) has no distance to any centroid:
+    # its cluster is null, so it joins no cluster downstream. This is the one
+    # place the UDF departs from the Catalyst fold, which sorted such a row
+    # into cluster 0.
     def _assign(batch):
-        if len(batch) == 0:
-            return pd.Series([], dtype="int32")
-        v = np.array(batch.tolist(), dtype=np.float64)
+        ok = np.fromiter(
+            (x is not None and len(x) == dim for x in batch), dtype=bool, count=len(batch)
+        )
+        good = [x for x, keep in zip(batch, ok) if keep]
+        v = np.array(good, dtype=np.float64).reshape(-1, dim)
+        whole = ~np.isnan(v).any(axis=1)
+        ok[ok] = whole
+        v = v[whole]
         dists = np.empty((v.shape[0], cents.shape[0]), dtype=np.float64)
         for ci in range(cents.shape[0]):
             acc = np.zeros(v.shape[0], dtype=np.float64)
-            for j in range(cents.shape[1]):
+            for j in range(dim):
                 t = v[:, j] - cents[ci, j]
                 acc = acc + t * t  # sequential: replicates the fold
             dists[:, ci] = acc
-        return pd.Series(np.argmin(dists, axis=1).astype("int32"))
+        cluster = np.zeros(len(batch), dtype=np.int32)
+        cluster[ok] = np.argmin(dists, axis=1)
+        return pd.Series(pd.arrays.IntegerArray(cluster, ~ok))
 
     return pandas_udf(_assign, "int")
 
@@ -499,8 +512,10 @@ def semdedup(
             dropped |= c.any(axis=0)
         return pd.DataFrame({id_col: ids[dropped]})
 
+    # a row without a cluster (null or ragged vector) is never a duplicate
     dropped = (
         assigned.select(id_col, "__q", "__cluster")
+        .filter(F.col("__cluster").isNotNull())
         .groupBy("__cluster")
         .applyInPandas(_dropped_in_cluster, out_schema)
     )

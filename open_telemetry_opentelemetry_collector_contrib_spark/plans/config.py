@@ -45,6 +45,7 @@ from ..operators import transform as transform_ops
 from ..operators.aggregate import windowed_count, windowed_sum
 from ..operators.route import Route, with_route_first_match, with_route_match_all
 from ..ottl.parser import parse_condition, parse_statement
+from ..sources.tables import local_frame
 
 STAGE_FACTORIES: dict[str, Callable] = {}
 
@@ -106,7 +107,7 @@ def _sample(spark, df, cfg):
 
 @stage("lookup")
 def _lookup(spark, df, cfg):
-    dim = spark.createDataFrame(cfg["rows"], cfg["columns"])
+    dim = local_frame(spark, cfg["rows"], cfg["columns"])
     return enrich_ops.lookup_enrich(df, dim, on=cfg["on"], how=cfg.get("how", "left"))
 
 

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .tables import local_frame
+
 DEFAULT_SIZE = 1000  # fingerprint.go:15
 MIN_SIZE = 16  # fingerprint.go:17
 
@@ -53,7 +55,7 @@ def fingerprint_files(
         raise ValueError(f"fingerprint size {size} < minimum {MIN_SIZE}")
     if isinstance(paths, str):
         paths = sorted(_glob.glob(paths))
-    listing = spark.createDataFrame([(p,) for p in paths], "path string")
+    listing = local_frame(spark, [(p,) for p in paths], "path string")
 
     def read_fps(batches):
         for pdf in batches:
@@ -90,8 +92,8 @@ def match_checkpoints(current: DataFrame, saved: dict[str, int]) -> DataFrame:
     spark = current.sparkSession
     if not saved:
         return current.withColumn("offset", F.lit(0).cast("long"))
-    saved_df = spark.createDataFrame(
-        [(k, int(v)) for k, v in saved.items()], "old_fp string, old_offset long"
+    saved_df = local_frame(
+        spark, [(k, int(v)) for k, v in saved.items()], "old_fp string, old_offset long"
     )
     joined = current.join(
         F.broadcast(saved_df), F.col("fp_hex").startswith(F.col("old_fp")), "left"

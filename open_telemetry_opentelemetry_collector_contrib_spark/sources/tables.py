@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -76,6 +79,38 @@ def materialize(df: DataFrame) -> DataFrame:
     consumers share the one materialization (MEMORY_AND_DISK, spills).
     """
     return df.localCheckpoint(eager=False)
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str | list[str]
+) -> DataFrame:
+    """A frame of driver-side Python rows that plans as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(rows, ...)`` goes through ``sc.parallelize``
+    and plans as ``Scan ExistingRDD``: every execution runs one more job
+    that pickles the rows, ships them to Python workers and unpickles them
+    before the JVM sees a single value, even for a four-row dimension.
+    Handing Spark an Arrow table instead puts the rows into the plan itself
+    (a ``LocalRelation``), which the JVM broadcasts or scans with no Python
+    worker. This is the one place in the package that builds a frame from
+    Python rows.
+
+    ``rows``: sequences, one value per field. ``schema``: a ``StructType``,
+    a DDL string, or a list of column names, in which case the types are
+    inferred exactly as ``createDataFrame`` infers them (int -> bigint,
+    float -> double, all fields nullable).
+    """
+    rows = [tuple(r) for r in rows]
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    elif not isinstance(schema, StructType):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

@@ -223,3 +223,45 @@ def test_logstransform_stanza_chain(spark):
         cfg.validate({"processors": [{"type": "logstransform",
                                       "operators": [{"type": "regex_parser",
                                                      "regex": "(?P<bad"}]}]})
+
+
+def test_lookup_stage_joins_local_dimension(spark, tmp_path):
+    """The ``lookup`` stage left-joins a dimension given as rows in the
+    config. The dimension is rows in the plan (LocalTableScan), not a
+    pickled Python RDD, and its column types are the ones createDataFrame
+    infers from the values (int -> bigint, float -> double)."""
+    path = str(tmp_path / "fact")
+    spark.range(5).selectExpr(
+        "id", "CASE WHEN id = 4 THEN 'c' WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS k"
+    ).write.parquet(path)
+    spec = {
+        "processors": [
+            {
+                "type": "lookup",
+                "on": "k",
+                "columns": ["k", "weight", "score", "flag"],
+                "rows": [["a", 1, 0.5, True], ["b", 2, 1.5, False]],
+            }
+        ]
+    }
+    out = cfg.build(spark, spec, spark.read.parquet(path))
+    # the plan before it runs (once run, AQE prints it twice)
+    tree = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    ).split("\n\n")[0]
+    assert tree.count("LocalTableScan") == 1
+    assert "ExistingRDD" not in tree
+    assert out.dtypes == [
+        ("k", "string"),
+        ("id", "bigint"),
+        ("weight", "bigint"),
+        ("score", "double"),
+        ("flag", "boolean"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("a", 0, 1, 0.5, True),
+        ("a", 2, 1, 0.5, True),
+        ("b", 1, 2, 1.5, False),
+        ("b", 3, 2, 1.5, False),
+        ("c", 4, None, None, None),
+    ]

@@ -30,6 +30,53 @@ def test_flagship_counts_plan_shape(spark):
     assert tree.count("HashAggregate") == 2
 
 
+def test_enrich_dims_plan_as_local_relations(spark, tmp_path):
+    """Both enrich dimensions are rows in the plan (LocalTableScan), never a
+    pickled Python RDD (Scan ExistingRDD), and both joins still broadcast —
+    in the flagship and in the runner's copy of the stages."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import transcripts
+    from open_telemetry_opentelemetry_collector_contrib_spark.plans.runner import (
+        PipelineRunner,
+    )
+
+    runner = PipelineRunner(spark, SF_UNIT, str(tmp_path))
+    for df in (
+        pipeline.sink_counts(spark, SF_UNIT),
+        runner._transform(transcripts(spark, SF_UNIT)),
+    ):
+        tree = explain(df).split("\n\n")[0]
+        assert tree.count("LocalTableScan") == 2
+        assert "ExistingRDD" not in tree
+        assert tree.count("BroadcastHashJoin") == 2
+
+
+def test_enrich_dim_schemas_pinned(spark):
+    """The dims keep the schema createDataFrame(rows, cols) inferred for
+    them, read back from the JVM plan."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import (
+        role_dim,
+        tool_dim,
+    )
+
+    def fields(df):
+        return [
+            (f.name, f.dataType.simpleString(), f.nullable)
+            for f in df.select("*").schema
+        ]
+
+    assert fields(role_dim(spark)) == [
+        ("role", "string", True),
+        ("role_kind", "string", True),
+        ("is_human", "boolean", True),
+        ("priority", "bigint", True),
+    ]
+    assert fields(tool_dim(spark)) == [
+        ("tool", "string", True),
+        ("tool_category", "string", True),
+        ("tool_owner", "string", True),
+    ]
+
+
 def test_parse_stage_stays_one_projection_no_shuffle(spark, tmp_path):
     # over a materialized transcripts table (the production input shape);
     # the synthetic derivation itself needs a row_number window, which is

@@ -82,6 +82,44 @@ def test_sink_files_are_ordered_within_partitions(run_out):
         assert key == sorted(key), f"unordered rows in {f}"
 
 
+# the Spark schema every sink file records, pinned before the enrich dims
+# moved from createDataFrame to tables.local_frame: the dim columns keep
+# their types and nullability
+SINK_SCHEMA = [
+    ("tool", "string", True),
+    ("role", "string", True),
+    ("conv_id", "string", True),
+    ("turn_idx", "integer", True),
+    ("text", "string", True),
+    ("ts", "timestamp_ntz", True),
+    ("level", "string", True),
+    ("action", "string", True),
+    ("latency_ms", "long", True),
+    ("status", "string", True),
+    ("msg", "string", True),
+    ("prop_k", "long", True),
+    ("parse_ok", "boolean", False),
+    ("role_kind", "string", True),
+    ("is_human", "boolean", True),
+    ("priority", "long", True),
+    ("tool_category", "string", False),
+    ("tool_owner", "string", False),
+]
+
+
+def test_sink_parquet_schema_pinned(run_out):
+    import pyarrow.parquet as pq
+
+    runner, _ = run_out
+    for sink in pipeline.SINKS:
+        sink_dir = os.path.join(runner.out_dir, "sinks", f"route={sink}", "chunk=00000")
+        part = next(f for f in sorted(os.listdir(sink_dir)) if f.endswith(".parquet"))
+        meta = pq.read_schema(os.path.join(sink_dir, part)).metadata
+        spark_schema = json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+        got = [(f["name"], f["type"], f["nullable"]) for f in spark_schema["fields"]]
+        assert got == SINK_SCHEMA, sink
+
+
 def test_merged_counts_equal_unchunked(run_out, spark):
     """Sum of per-chunk delta counts == the single-pass (unchunked) counts:
     delta temporality rolls up losslessly across chunk boundaries because

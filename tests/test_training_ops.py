@@ -565,6 +565,44 @@ def test_semdedup_min_id_keep_rule(spark):
     assert not out[2].kept and not out[3].kept and not out[6].kept
 
 
+def test_nearest_centroid_null_and_short_vectors(spark):
+    """A null vector and a vector shorter than the centroids get a null
+    cluster instead of failing the Arrow batch they share with good rows,
+    which are assigned as before."""
+    assign = similarity._nearest_centroid_udf([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    df = spark.createDataFrame(
+        [(1, [0.9, 0.1, 0.0]), (2, None), (3, [0.0, 1.0]), (4, [0.1, 0.8, 0.2])],
+        "vec_id long, v array<double>",
+    ).coalesce(1)  # one batch holds the bad rows and the good ones
+    got = {
+        r.vec_id: r.c
+        for r in df.select("vec_id", assign(F.col("v")).alias("c")).collect()
+    }
+    assert got == {1: 0, 2: None, 3: None, 4: 1}
+
+
+def test_semdedup_keeps_rows_without_cluster(spark):
+    """Rows whose vector is null or ragged get no cluster, so they are never
+    anyone's duplicate; the pair stage skips them instead of failing."""
+    centroids = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    rows = [
+        (1, [1.0, 0.01, 0.0, 0.0]),
+        (2, [1.0, 0.02, 0.0, 0.0]),  # near-dup of 1 -> dropped
+        (3, None),
+        (4, [0.0, 1.0]),
+        (5, [0.0, 1.0, 0.01, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = similarity.semdedup(df, centroids, eps_sq_num=98, eps_sq_den=100)
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, True),
+        (2, 0, False),
+        (3, None, True),
+        (4, None, True),
+        (5, 1, True),
+    ]
+
+
 def test_repeated_ngram_spans_merge_and_cut_list(spark):
     """repeated_ngram_spans marks exactly the cross-doc duplicated token
     runs and merges overlapping n-gram hits into maximal spans."""
