@@ -167,33 +167,12 @@ def scaled_table(spark):
 def run_e2e_on_scaled(spark) -> float:
     """The full pipeline over the scaled transcripts: parse -> enrich ->
     route -> windowed counts, forced with a noop write."""
-    from pyspark.sql import functions as F
-
-    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import role_dim, tool_dim
-    from open_telemetry_opentelemetry_collector_contrib_spark.operators import (
-        aggregate as agg_ops,
-        enrich as enrich_ops,
-        parse as parse_ops,
-    )
-    from open_telemetry_opentelemetry_collector_contrib_spark.operators.route import (
-        with_route_first_match,
-    )
     from open_telemetry_opentelemetry_collector_contrib_spark.plans.pipeline import (
-        WINDOW_S,
-        routing_table,
+        count_routes,
+        route_transcripts,
     )
 
-    t = scaled_table(spark)
-    df = parse_ops.parse_transcripts(t)
-    df = enrich_ops.lookup_enrich(df, role_dim(spark), on="role")
-    df = enrich_ops.lookup_enrich(df, tool_dim(spark), on="tool")
-    df = enrich_ops.upsert(
-        df, "tool_category", F.coalesce(F.col("tool_category"), F.lit("unknown"))
-    )
-    routed = with_route_first_match(df, routing_table())
-    counts = agg_ops.windowed_count(
-        routed, keys=["route", "conv_id", "role", "tool"], window_s=WINDOW_S
-    )
+    counts = count_routes(route_transcripts(scaled_table(spark)))
     t0 = time.perf_counter()
     force(counts)
     return time.perf_counter() - t0

@@ -26,12 +26,11 @@ SINKS = ["errors", "tool_calls", "human", "default"]
 WINDOW_S = 86400  # daily tumbling windows over the synthetic month of data
 
 
-def parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parse_ops.parse_transcripts(transcripts(spark, sf_dir))
-
-
-def enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = parsed(spark, sf_dir)
+def enrich(df: DataFrame) -> DataFrame:
+    """Broadcast-join the role and tool dimensions onto parsed rows. The
+    dims come from ``df.sparkSession``, so batch and streaming frames share
+    this one definition."""
+    spark = df.sparkSession
     df = enrich_ops.lookup_enrich(df, role_dim(spark), on="role")
     df = enrich_ops.lookup_enrich(df, tool_dim(spark), on="tool")
     # attributesprocessor analog: upsert a default category for tools absent
@@ -51,15 +50,32 @@ def routing_table() -> list[Route]:
     ]
 
 
-def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_route_first_match(enriched(spark, sf_dir), routing_table())
+def route_transcripts(t: DataFrame) -> DataFrame:
+    """parse -> enrich -> first-match route over any transcripts-shaped
+    frame (conv_id, turn_idx, role, text, tool, ts), batch or streaming:
+    the one definition of the flagship stages."""
+    return with_route_first_match(enrich(parse_ops.parse_transcripts(t)), routing_table())
 
 
-def sink_counts(spark: SparkSession, sf_dir: str, window_s: int = WINDOW_S) -> DataFrame:
+def count_routes(routed: DataFrame) -> DataFrame:
     """countconnector per sink: tumbling-window counts keyed
     (conv_id, role, tool) — the BASELINE aggregate contract."""
     return agg_ops.windowed_count(
-        routed(spark, sf_dir),
-        keys=["route", "conv_id", "role", "tool"],
-        window_s=window_s,
+        routed, keys=["route", "conv_id", "role", "tool"], window_s=WINDOW_S
     )
+
+
+def parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return parse_ops.parse_transcripts(transcripts(spark, sf_dir))
+
+
+def enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return enrich(parsed(spark, sf_dir))
+
+
+def routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return route_transcripts(transcripts(spark, sf_dir))
+
+
+def sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return count_routes(routed(spark, sf_dir))

@@ -1,9 +1,13 @@
 """Resumable pipeline runner: chunked execution, per-chunk lineage + metrics.
 
+The stages are the flagship's: each chunk runs
+``pipeline.route_transcripts`` (parse -> enrich -> route), so sink rows
+carry exactly the columns of ``pipeline.routed``.
+
 North-rule requirements implemented here:
-- **per-sink tables**: one routed pass, written per sink under
-  ``<out>/sinks/route=<name>/chunk=<id>/`` (fileexporter group_by analog —
-  `exporter/fileexporter/grouping_file_exporter.go:116-152`);
+- **per-sink tables**: one routed pass, fanned out by ``sinks.write_sinks``
+  under ``<out>/sinks/route=<name>/chunk=<id>/`` (fileexporter group_by
+  analog — `exporter/fileexporter/grouping_file_exporter.go:116-152`);
 - **per-partition lineage + metrics**: the source file list is split into
   chunks; each chunk commit records its files, row metrics (parsed/routed/
   dropped/per-route) and status in ``<out>/lineage/``. Metrics come from
@@ -26,23 +30,20 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..datagen import role_dim, tool_dim, transcripts
-from ..operators import enrich as enrich_ops
-from ..operators import parse as parse_ops
-from ..operators.aggregate import windowed_count
-from ..operators.route import with_route_first_match
+from ..datagen import transcripts
 from ..sources import sinks as sinks_io
 from . import pipeline as flagship
 
+SALT_BUCKETS = 8
 
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
+
+def _list_parquet_files(path: str) -> list[str]:
     if os.path.isdir(path):
         return sorted(
             os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
@@ -68,8 +69,6 @@ class PipelineRunner:
         source: str,
         out_dir: str,
         num_chunks: int = 4,
-        window_s: int = flagship.WINDOW_S,
-        salt_buckets: int = 8,
         fmt: str = "parquet",
         table_prefix: str = "otelcol.sinks",
     ):
@@ -77,8 +76,6 @@ class PipelineRunner:
         self.source = source
         self.out_dir = out_dir
         self.num_chunks = num_chunks
-        self.window_s = window_s
-        self.salt_buckets = salt_buckets
         # fmt='iceberg' routes every sink write through sinks.write_table
         # against `<table_prefix>.route_<sink>` tables partitioned by
         # chunk_id, using overwritePartitions() so each chunk commit is one
@@ -118,27 +115,11 @@ class PipelineRunner:
             json.dump(rec, fh)
         os.replace(tmp, self._lineage_path(result.chunk_id))  # atomic commit
 
-    # -- pipeline stages (reuse the flagship stage functions) ---------------
-
-    def _transform(self, t: DataFrame) -> DataFrame:
-        """t: a transcripts-shaped frame (conv_id, turn_idx, role, text, tool, ts)."""
-        df = parse_ops.parse_transcripts(t)
-        df = enrich_ops.lookup_enrich(df, role_dim(self.spark), on="role")
-        df = enrich_ops.lookup_enrich(df, tool_dim(self.spark), on="tool")
-        df = enrich_ops.upsert(
-            df, "tool_category", F.coalesce(F.col("tool_category"), F.lit("unknown"))
-        )
-        df = enrich_ops.upsert(
-            df, "tool_owner", F.coalesce(F.col("tool_owner"), F.lit("unknown"))
-        )
-        return with_route_first_match(df, flagship.routing_table())
-
     # -- chunk execution -----------------------------------------------------
 
     def run_chunk(self, chunk_id: int, files: list[str]) -> ChunkResult:
         t0 = time.perf_counter()
-        raw = self.spark.read.parquet(*files)
-        routed = self._transform(raw)
+        routed = flagship.route_transcripts(self.spark.read.parquet(*files))
 
         obs = Observation(f"chunk-{chunk_id}")
         observed = routed.observe(
@@ -152,57 +133,31 @@ class PipelineRunner:
             ],
         )
 
-        # deterministic per-sink row order: the BASELINE byte-equality
-        # contract — repartition by conv_id, sort (conv_id, turn_idx) within
-        # partitions, then write each sink from the cached routed frame.
-        # (A single partitionBy('route') write would re-sort rows by the
-        # partition columns unstably inside FileFormatWriter, destroying the
-        # secondary order; per-sink filtered writes off the cache keep the
-        # upstream compute single-pass — the reference's group-before-
-        # dispatch, `routingconnector/logs.go:119-124`. On Iceberg the
-        # equivalent is one fanout write with a sort order spec.)
-        sink_dir = os.path.join(self.out_dir, "sinks")
-        chunk_glob = f"chunk={chunk_id:05d}"
-        ordered = (
-            observed.repartition(F.col("conv_id"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .persist()
-        )
-        for sink in flagship.SINKS:
-            per_sink = ordered.filter(F.col("route") == sink).drop("route")
+        def write(df: DataFrame, table: str, path: str) -> None:
             if self.fmt == "iceberg":
-                # per-sink Iceberg table partitioned by chunk_id; one
+                # one Iceberg table per output, partitioned by chunk_id; one
                 # dynamic-overwrite snapshot per chunk = idempotent re-run
                 sinks_io.write_table(
-                    per_sink.withColumn("chunk_id", F.lit(chunk_id)),
-                    f"{self.table_prefix}.route_{sink}",
+                    df.withColumn("chunk_id", F.lit(chunk_id)),
+                    f"{self.table_prefix}.{table}",
                     mode="overwrite_partitions",
                     group_by=["chunk_id"],
                     fmt="iceberg",
                 )
             else:
-                dst = os.path.join(sink_dir, f"route={sink}", chunk_glob)
-                per_sink.write.mode("overwrite").parquet(dst)
+                dst = os.path.join(self.out_dir, path, f"chunk={chunk_id:05d}")
+                df.write.mode("overwrite").parquet(dst)
 
+        with sinks_io.write_sinks(
+            observed,
+            flagship.SINKS,
+            lambda df, s: write(df, f"route_{s}", os.path.join("sinks", f"route={s}")),
+        ) as ordered:
+            # aggregate stage off the cached ordered frame: salted two-phase
+            # count to absorb hot conv_ids, written per chunk (delta
+            # temporality, like the count connector's per-batch emission)
+            write(self._salted_counts(ordered), "counts", "counts")
         metrics = {k: int(v) for k, v in obs.get.items()}
-
-        # aggregate stage off the cached ordered frame: salted two-phase count
-        # to absorb hot conv_ids, written per chunk (delta temporality, like
-        # the count connector's per-batch emission)
-        counts = self._salted_counts(ordered)
-        if self.fmt == "iceberg":
-            sinks_io.write_table(
-                counts.withColumn("chunk_id", F.lit(chunk_id)),
-                f"{self.table_prefix}.counts",
-                mode="overwrite_partitions",
-                group_by=["chunk_id"],
-                fmt="iceberg",
-            )
-        else:
-            counts.write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, "counts", chunk_glob)
-            )
-        ordered.unpersist()
 
         res = ChunkResult(
             chunk_id=chunk_id,
@@ -218,13 +173,13 @@ class PipelineRunner:
 
         Hot conv_ids (the skew FIXTURES.md bakes in) would otherwise send all
         their rows to one reducer; the salt spreads phase 1 across
-        ``salt_buckets`` reducers and phase 2 merges tiny partials.
+        ``SALT_BUCKETS`` reducers and phase 2 merges tiny partials.
         """
         keyed = routed.withColumn(
             "window_id",
-            F.floor(F.unix_timestamp("ts") / self.window_s).cast("bigint"),
+            F.floor(F.unix_timestamp("ts") / flagship.WINDOW_S).cast("bigint"),
         ).withColumn(
-            "__salt", F.pmod(F.xxhash64("turn_idx"), F.lit(self.salt_buckets))
+            "__salt", F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
         )
         partial = keyed.groupBy(
             "__salt", "window_id", "route", "conv_id", "role", "tool"
@@ -237,7 +192,7 @@ class PipelineRunner:
     # -- full run ------------------------------------------------------------
 
     def run(self, resume: bool = True) -> list[ChunkResult]:
-        files = _list_parquet_files(self.spark, self.source)
+        files = _list_parquet_files(self.source)
         chunks: dict[int, list[str]] = {i: [] for i in range(self.num_chunks)}
         for i, f in enumerate(files):
             chunks[i % self.num_chunks].append(f)

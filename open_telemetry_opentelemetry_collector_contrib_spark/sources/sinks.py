@@ -13,12 +13,16 @@ The reference's fileexporter writes JSON/proto files with rotation and a
 ``group_by`` -> ``partitionBy``; deterministic row order inside files is the
 caller's job (repartition + sortWithinPartitions BEFORE calling, and do not
 combine with partitionBy, whose writer re-sorts by partition columns
-unstably — see plans/runner.py).
+unstably — see ``write_sinks``, which fans routed rows out that way).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -76,8 +80,6 @@ def write_table(
                         "write.parquet.compression-codec", compression
                     )
                 if group_by:
-                    from pyspark.sql import functions as F
-
                     writer = writer.partitionedBy(*[F.col(c) for c in group_by])
                 writer.create()
             return
@@ -85,8 +87,6 @@ def write_table(
         if compression:
             writer = writer.tableProperty("write.parquet.compression-codec", compression)
         if group_by:
-            from pyspark.sql import functions as F
-
             writer = writer.partitionedBy(*[F.col(c) for c in group_by])
         if mode == "overwrite":
             writer.createOrReplace()
@@ -108,6 +108,37 @@ def write_table(
     if group_by:
         w = w.partitionBy(*group_by)
     w.parquet(target)
+
+
+@contextmanager
+def write_sinks(
+    routed: DataFrame, sinks: list[str], write: Callable[[DataFrame, str], None]
+) -> Iterator[DataFrame]:
+    """Routing-connector fan-out: ``write(rows, sink)`` once per sink, with
+    the ``route`` column dropped, then yield the cached ordered frame for
+    further writes off the same single pass.
+
+    Rows are repartitioned by conv_id and sorted (conv_id, turn_idx) within
+    partitions: the deterministic per-sink row order contract. A single
+    ``partitionBy('route')`` write would re-sort rows by the partition
+    column unstably inside FileFormatWriter and lose the secondary order;
+    per-sink filtered writes off the cache keep the upstream compute
+    single-pass — the reference's group-before-dispatch,
+    `routingconnector/logs.go:119-124`. On Iceberg the equivalent is one
+    fanout write with a sort order spec. The cache is dropped on exit, also
+    when a write raises.
+    """
+    ordered = (
+        routed.repartition(F.col("conv_id"))
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .persist()
+    )
+    try:
+        for sink in sinks:
+            write(ordered.filter(F.col("route") == sink).drop("route"), sink)
+        yield ordered
+    finally:
+        ordered.unpersist()
 
 
 def write_with_failover(

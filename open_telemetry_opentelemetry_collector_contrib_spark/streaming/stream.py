@@ -2,7 +2,9 @@
 
 The reference is a streaming system (receivers push batches through the
 processor chain). Our batch stage functions are stateless DF -> DF programs,
-so they lift unchanged onto ``readStream``:
+so they lift unchanged onto ``readStream``: a stream runs the identical code
+path, ``pipeline.route_transcripts``, and fans out through the same
+``sinks.write_sinks`` as the batch runner:
 
     readStream(parquet dir) -> parse -> enrich(broadcast dims) -> route
         -> watermarked windowed counts -> sink (foreachBatch / parquet)
@@ -21,11 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datagen import role_dim, tool_dim
-from ..operators import enrich as enrich_ops
-from ..operators import parse as parse_ops
-from ..operators.route import with_route_first_match
 from ..plans import pipeline as flagship
+from ..sources.sinks import write_sinks
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -49,17 +48,6 @@ def stream_source(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(src_dir)
-
-
-def transform_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """parse -> enrich -> route; identical code path to the batch pipeline."""
-    df = parse_ops.parse_transcripts(stream)
-    df = enrich_ops.lookup_enrich(df, role_dim(spark), on="role")
-    df = enrich_ops.lookup_enrich(df, tool_dim(spark), on="tool")
-    df = enrich_ops.upsert(
-        df, "tool_category", F.coalesce(F.col("tool_category"), F.lit("unknown"))
-    )
-    return with_route_first_match(df, flagship.routing_table())
 
 
 def windowed_sink_counts(
@@ -158,28 +146,21 @@ def route_fan_out_stream(
     """Streaming routing-connector fan-out: every micro-batch is routed once
     and written per sink (the full exporter fan-out under streaming).
 
-    foreachBatch is the streaming analog of the runner's
-    group-before-dispatch: one routed frame per batch, per-sink filtered
-    writes off a cache, batch id recorded for idempotent replay.
+    foreachBatch is the streaming analog of a runner chunk: one routed
+    frame per batch, fanned out by ``sinks.write_sinks`` (per-sink filtered
+    writes off a cache), batch id recorded for idempotent replay.
     """
     import os
 
-    from pyspark.sql import functions as F
-
-    routed_stream = transform_stream(spark, stream_source(spark, src_dir))
+    routed_stream = flagship.route_transcripts(stream_source(spark, src_dir))
 
     def write_batch(batch_df, batch_id: int) -> None:
-        cached = (
-            batch_df.repartition(F.col("conv_id"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .persist()
-        )
-        for sink in flagship.SINKS:
+        def write(df: DataFrame, sink: str) -> None:
             dst = os.path.join(out_dir, f"route={sink}", f"batch={batch_id:05d}")
-            cached.filter(F.col("route") == sink).drop("route").write.mode(
-                "overwrite"
-            ).parquet(dst)
-        cached.unpersist()
+            df.write.mode("overwrite").parquet(dst)
+
+        with write_sinks(batch_df, flagship.SINKS, write):
+            pass
 
     q = (
         routed_stream.writeStream.foreachBatch(write_batch)
@@ -200,7 +181,7 @@ def run_available_now(
     """Drain everything currently in src_dir through the full pipeline into
     parquet, then stop (the batch-parity execution mode; restart with the
     same checkpoint to process only new files)."""
-    routed = transform_stream(spark, stream_source(spark, src_dir))
+    routed = flagship.route_transcripts(stream_source(spark, src_dir))
     counts = windowed_sink_counts(routed, window=window)
     q = (
         counts.writeStream.outputMode("append")

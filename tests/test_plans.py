@@ -30,19 +30,15 @@ def test_flagship_counts_plan_shape(spark):
     assert tree.count("HashAggregate") == 2
 
 
-def test_enrich_dims_plan_as_local_relations(spark, tmp_path):
+def test_enrich_dims_plan_as_local_relations(spark):
     """Both enrich dimensions are rows in the plan (LocalTableScan), never a
     pickled Python RDD (Scan ExistingRDD), and both joins still broadcast —
-    in the flagship and in the runner's copy of the stages."""
+    in the counts and in the routed rows the runner and stream write."""
     from open_telemetry_opentelemetry_collector_contrib_spark.datagen import transcripts
-    from open_telemetry_opentelemetry_collector_contrib_spark.plans.runner import (
-        PipelineRunner,
-    )
 
-    runner = PipelineRunner(spark, SF_UNIT, str(tmp_path))
     for df in (
         pipeline.sink_counts(spark, SF_UNIT),
-        runner._transform(transcripts(spark, SF_UNIT)),
+        pipeline.route_transcripts(transcripts(spark, SF_UNIT)),
     ):
         tree = explain(df).split("\n\n")[0]
         assert tree.count("LocalTableScan") == 2

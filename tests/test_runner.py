@@ -84,7 +84,8 @@ def test_sink_files_are_ordered_within_partitions(run_out):
 
 # the Spark schema every sink file records, pinned before the enrich dims
 # moved from createDataFrame to tables.local_frame: the dim columns keep
-# their types and nullability
+# their types and nullability. pipeline_tag is the flagship enrich's insert,
+# which runner and stream sinks carry since they share its stages.
 SINK_SCHEMA = [
     ("tool", "string", True),
     ("role", "string", True),
@@ -104,6 +105,7 @@ SINK_SCHEMA = [
     ("priority", "long", True),
     ("tool_category", "string", False),
     ("tool_owner", "string", False),
+    ("pipeline_tag", "string", False),
 ]
 
 
@@ -318,6 +320,30 @@ def test_runner_iceberg_crash_resume_idempotent(spark, tmp_path, monkeypatch):
     # the re-run covered every sink + counts exactly once
     rerun = calls[partial:]
     assert len(rerun) == len(flagship.SINKS) + 1
+
+
+def test_failed_sink_write_drops_the_cache(spark, tmp_path, monkeypatch):
+    """A sink write that raises still unpersists the routed frame the fan-out
+    cached: nothing is left in the session's cache manager."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import transcripts
+    from open_telemetry_opentelemetry_collector_contrib_spark.plans import runner as runner_mod
+
+    src = str(tmp_path / "src")
+    transcripts(spark, SF_UNIT).limit(1000).write.parquet(src)
+
+    def failing_write_table(df, target, mode="overwrite", group_by=None, fmt="auto"):
+        df.count()  # the write ran far enough to fill the cache
+        raise RuntimeError("simulated sink failure")
+
+    monkeypatch.setattr(runner_mod.sinks_io, "write_table", failing_write_table)
+    r = runner_mod.PipelineRunner(
+        spark, src, str(tmp_path / "out"), num_chunks=1,
+        fmt="iceberg", table_prefix="cat.db",
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="simulated sink failure"):
+        r.run(resume=False)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_write_table_compression(spark, tmp_path):

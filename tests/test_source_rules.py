@@ -1,9 +1,14 @@
 """Source rules that are checked, not just documented.
 
-No frame is built from Python rows with ``createDataFrame``/``parallelize``
-outside ``sources.tables.local_frame``: those plan as ``Scan ExistingRDD``,
-so every execution pickles the rows through Python workers. The scan reads
-the syntax tree, so docstrings and comments that name the calls are fine.
+- No frame is built from Python rows with ``createDataFrame``/``parallelize``
+  outside ``sources.tables.local_frame``: those plan as ``Scan ExistingRDD``,
+  so every execution pickles the rows through Python workers.
+- The flagship stages have one definition: only ``plans/pipeline.py`` calls
+  ``parse_transcripts``, ``role_dim`` and ``tool_dim``; everything else
+  composes parse -> enrich -> route through ``pipeline.route_transcripts``.
+
+The scan reads the syntax tree, so docstrings and comments that name the
+calls are fine.
 """
 
 from __future__ import annotations
@@ -17,12 +22,21 @@ PKG = REPO / "open_telemetry_opentelemetry_collector_contrib_spark"
 # the package, the top-level entry points and scripts/ (not tests/, and not
 # perfbench/, which is the benchmark's own code)
 SOURCES = sorted([*PKG.rglob("*.py"), *REPO.glob("*.py"), *(REPO / "scripts").glob("*.py")])
-BANNED = {"createDataFrame", "parallelize"}
-# (file, enclosing top-level function) where a banned call is the point
-ALLOWED = {(PKG / "sources" / "tables.py", "local_frame")}
+ROW_FRAME_CALLS = {"createDataFrame", "parallelize"}
+LOCAL_FRAME = (PKG / "sources" / "tables.py", "local_frame")
+FLAGSHIP = (PKG / "plans" / "pipeline.py", None)
+# call name -> the only places it may be called: (file, enclosing top-level
+# function), where None allows any function of the file
+ALLOWED = {
+    "createDataFrame": {LOCAL_FRAME},
+    "parallelize": {LOCAL_FRAME},
+    "parse_transcripts": {FLAGSHIP},
+    "role_dim": {FLAGSHIP},
+    "tool_dim": {FLAGSHIP},
+}
 
 
-class _BannedCalls(ast.NodeVisitor):
+class _RuledCalls(ast.NodeVisitor):
     def __init__(self):
         self.scope: list[str] = []
         self.found: list[tuple[int, str, str | None]] = []
@@ -37,19 +51,24 @@ class _BannedCalls(ast.NodeVisitor):
     def visit_Call(self, node):
         f = node.func
         name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        if name in BANNED:
+        if name in ALLOWED:
             self.found.append((node.lineno, name, self.scope[0] if self.scope else None))
         self.generic_visit(node)
 
 
-def banned_calls(source: str, path: Path) -> list[str]:
-    visitor = _BannedCalls()
+def banned_calls(source: str, path: Path, names=ALLOWED.keys()) -> list[str]:
+    """Calls to ``names`` in ``source`` that are outside their allowed places."""
+    visitor = _RuledCalls()
     visitor.visit(ast.parse(source, filename=str(path)))
     return [
         f"{path.relative_to(REPO)}:{line} {name}()"
         for line, name, func in visitor.found
-        if (path, func) not in ALLOWED
+        if name in names and not {(path, func), (path, None)} & ALLOWED[name]
     ]
+
+
+def offenders(names) -> list[str]:
+    return [hit for p in SOURCES for hit in banned_calls(p.read_text(), p, names)]
 
 
 def test_scanner_flags_banned_calls():
@@ -68,7 +87,29 @@ def test_scanner_flags_banned_calls():
     assert banned_calls("def local_frame(spark, t):\n    return spark.createDataFrame(t)\n", allowed) == []
 
 
+def test_scanner_flags_flagship_stage_copies():
+    src = (
+        "def stages(spark, t):\n"
+        "    df = parse_ops.parse_transcripts(t)\n"
+        "    return lookup_enrich(df, role_dim(spark), on='role')\n"
+    )
+    assert banned_calls(src, PKG / "plans" / "runner.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:2 parse_transcripts()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:3 role_dim()",
+    ]
+    assert banned_calls(src, PKG / "plans" / "pipeline.py") == []
+    # the flagship file gets no pass for Python-row frames
+    assert banned_calls("def f(spark):\n    spark.createDataFrame([])\n", PKG / "plans" / "pipeline.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/pipeline.py:2 createDataFrame()",
+    ]
+
+
 def test_no_python_row_frames_outside_local_frame():
     assert len(SOURCES) > 50  # the package was found
-    offenders = [hit for p in SOURCES for hit in banned_calls(p.read_text(), p)]
-    assert offenders == [], "use sources.tables.local_frame instead: " + ", ".join(offenders)
+    hits = offenders(ROW_FRAME_CALLS)
+    assert hits == [], "use sources.tables.local_frame instead: " + ", ".join(hits)
+
+
+def test_flagship_stages_defined_once():
+    hits = offenders(ALLOWED.keys() - ROW_FRAME_CALLS)
+    assert hits == [], "compose the stages with pipeline.route_transcripts: " + ", ".join(hits)

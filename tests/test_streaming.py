@@ -3,8 +3,10 @@ source must reproduce the batch pipeline's routed counts."""
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +16,7 @@ from open_telemetry_opentelemetry_collector_contrib_spark.plans.runner import (
 )
 from open_telemetry_opentelemetry_collector_contrib_spark.streaming import stream as st
 from tests.conftest import SF_UNIT
+from tests.test_runner import SINK_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +26,7 @@ def transcripts_dir(spark, tmp_path_factory):
 
 
 def test_streaming_counts_match_batch(spark, transcripts_dir):
-    routed = st.transform_stream(spark, st.stream_source(spark, transcripts_dir))
+    routed = pipeline.route_transcripts(st.stream_source(spark, transcripts_dir))
     counts = st.windowed_sink_counts(routed)
     q = (
         counts.writeStream.format("memory")
@@ -66,10 +69,27 @@ def test_streaming_route_fan_out(spark, transcripts_dir, tmp_path):
         assert got.count() == exp.count(), sink
         total += got.count()
     assert total == 1000
+    # the same columns as the runner's sink files, in the same
+    # (conv_id, turn_idx) order within each file. The one difference is the
+    # event time: the stream source declares ts as timestamp (with local
+    # time zone), because watermarks do not accept timestamp_ntz.
+    expected = [("ts", "timestamp", True) if c[0] == "ts" else c for c in SINK_SCHEMA]
+    files = [
+        os.path.join(dp, f) for dp, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")
+    ]
+    assert files
+    for f in files:
+        meta = pq.read_schema(f).metadata
+        spark_schema = json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+        got = [(c["name"], c["type"], c["nullable"]) for c in spark_schema["fields"]]
+        assert got == expected, f
+        t = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pandas()
+        key = list(zip(t.conv_id, t.turn_idx))
+        assert key == sorted(key), f"unordered rows in {f}"
 
 
 def test_streaming_dedup_bounded_output(spark, transcripts_dir):
-    routed = st.transform_stream(spark, st.stream_source(spark, transcripts_dir))
+    routed = pipeline.route_transcripts(st.stream_source(spark, transcripts_dir))
     deduped = st.streaming_dedup(routed)
     q = (
         deduped.writeStream.format("memory")
@@ -345,7 +365,7 @@ def test_streaming_logdedup_matches_batch(spark, transcripts_dir):
         dedup as dedup_ops,
     )
 
-    routed = st.transform_stream(spark, st.stream_source(spark, transcripts_dir))
+    routed = pipeline.route_transcripts(st.stream_source(spark, transcripts_dir))
     cols = ["conv_id", "turn_idx", "role", "tool", "level", "status", "ts"]
     out = st.logdedup_stream(
         routed.select(*cols),
@@ -397,7 +417,7 @@ def test_streaming_span_metrics_matches_batch(spark, transcripts_dir):
         metrics as metric_ops,
     )
 
-    routed = st.transform_stream(spark, st.stream_source(spark, transcripts_dir))
+    routed = pipeline.route_transcripts(st.stream_source(spark, transcripts_dir))
     spans = routed.filter(F.col("latency_ms").isNotNull()).select(
         "route", "role", "latency_ms", "ts"
     )
