@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -88,7 +89,7 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         spark.sparkContext.setJobDescription(None)
         runs.sort()
-        med = runs[len(runs) // 2] if len(runs) % 2 else runs[len(runs) // 2 - 1]
+        med = statistics.median(runs)
         results[name] = round(med, 3)
         print(
             json.dumps(

@@ -490,13 +490,17 @@ def semdedup(
 
     num, den = int(eps_sq_num), int(eps_sq_den)
     cap = int(max_cluster_size)
-    out_schema = T.StructType([T.StructField(id_col, T.LongType())])
+    # ids keep their own type (long, int, string): numpy orders them as
+    # Spark and DuckDB compare them, so min-id means the same everywhere
+    out_schema = T.StructType(
+        [T.StructField(id_col, corpus.schema[id_col].dataType)]
+    )
 
     def _dropped_in_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         k = len(pdf)
         if k < 2 or k > cap:
-            return pd.DataFrame({id_col: np.array([], dtype=np.int64)})
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+            return pdf[[id_col]].iloc[:0]
+        ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
         m = np.array(pdf["__q"].tolist(), dtype=np.int64)[order]

@@ -24,8 +24,8 @@ from . import pipeline
 
 _PREFIX = datagen.duckdb_cte_prefix()
 
-# re-usable DuckDB parsed-transcripts CTE (duplicated from __spark_entry__ to
-# keep the catalog self-contained)
+# DuckDB parsed-transcripts CTE for this catalog's oracles: the flagship
+# regex fields plus the raw ``text``, without ``prop_k``/``parse_ok``
 _PARSED_CTE = r"""
 , parsed AS (
   SELECT conv_id, turn_idx, role, tool, ts,
@@ -832,7 +832,7 @@ def q_span_metrics(spark, sf_dir):
     )
 
 
-def _span_metrics_oracle() -> str:
+def span_metrics_oracle() -> str:
     bounds = metric_ops.DEFAULT_BUCKETS_MS
     idx = " + ".join(
         f"CASE WHEN CAST(latency_ms AS DOUBLE) > {float(b)} THEN 1 ELSE 0 END" for b in bounds
@@ -1102,72 +1102,3 @@ SELECT event_id,
        'x'
 FROM events
 """
-
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-CATALOG_QUERIES = {
-    "filter_ottl_events": q_filter_ottl_events,
-    "filter_match_props": q_filter_match_props,
-    "transform_statements": q_transform_statements,
-    "logdedup_transcripts": q_logdedup_transcripts,
-    "boilerplate_turns": q_boilerplate_turns,
-    "conv_quality": q_conv_quality,
-    "conv_integrity": q_conv_integrity,
-    "conv_sessions": q_conv_sessions,
-    "expo_cumulative": q_expo_cumulative,
-    "conv_dedup": q_conv_dedup,
-    "sample_lcg_events": q_sample_lcg_events,
-    "sample_hash_transcripts": q_sample_hash_transcripts,
-    "delta_to_cumulative": q_delta_to_cumulative,
-    "cumulative_to_delta": q_cumulative_to_delta,
-    "histogram_cumulative_to_delta": q_histogram_cumulative_to_delta,
-    "histogram_delta_to_cumulative": q_histogram_delta_to_cumulative,
-    "delta_to_rate": q_delta_to_rate,
-    "interval_last": q_interval_last,
-    "interval_passthrough": q_interval_passthrough,
-    "span_metrics": q_span_metrics,
-    "recombine_conversations": q_recombine_conversations,
-    "route_match_all": q_route_match_all,
-    "enrich_star_join": q_enrich_star_join,
-    "events_props_json": q_events_props_json,
-    "kv_roundtrip_events": q_kv_roundtrip_events,
-    "grok_apache_clf": q_grok_apache_clf,
-    "otlpjson_explode": q_otlpjson_explode,
-    "sample_otep235_proportional": q_sample_otep235_proportional,
-    "sample_otep235_equalizing": q_sample_otep235_equalizing,
-}
-
-CATALOG_ORACLES = {
-    "filter_ottl_events": O_FILTER_OTTL,
-    "filter_match_props": O_FILTER_MATCH,
-    "transform_statements": O_TRANSFORM,
-    "logdedup_transcripts": O_LOGDEDUP,
-    "boilerplate_turns": O_BOILERPLATE_TURNS,
-    "conv_quality": O_CONV_QUALITY,
-    "conv_integrity": O_CONV_INTEGRITY,
-    "conv_sessions": O_CONV_SESSIONS,
-    "expo_cumulative": O_EXPO_CUMULATIVE,
-    "conv_dedup": O_CONV_DEDUP,
-    "sample_lcg_events": O_SAMPLE_LCG,
-    "sample_hash_transcripts": O_SAMPLE_HASH,
-    "delta_to_cumulative": O_D2C,
-    "cumulative_to_delta": O_C2D,
-    "histogram_cumulative_to_delta": O_HIST_C2D,
-    "histogram_delta_to_cumulative": O_HIST_D2C,
-    "delta_to_rate": O_RATE,
-    "interval_last": O_INTERVAL,
-    "interval_passthrough": O_INTERVAL_PASSTHROUGH,
-    "span_metrics": _span_metrics_oracle(),
-    "recombine_conversations": O_RECOMBINE,
-    "route_match_all": O_ROUTE_ALL,
-    "enrich_star_join": O_STAR_JOIN,
-    "events_props_json": O_PROPS_JSON,
-    "kv_roundtrip_events": O_KV_ROUNDTRIP,
-    "grok_apache_clf": O_GROK_CLF,
-    "otlpjson_explode": O_OTLP_EXPLODE,
-    "sample_otep235_proportional": O_OTEP_PROP,
-    "sample_otep235_equalizing": O_OTEP_EQ,
-}

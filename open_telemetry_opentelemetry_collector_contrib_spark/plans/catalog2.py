@@ -357,7 +357,7 @@ def q_syslog_parse(spark, sf_dir):
     )
 
 
-def _syslog_oracle() -> str:
+def syslog_oracle() -> str:
     line = _SYSLOG_LINE.replace("{STR}", "VARCHAR")
     return f"""
 WITH lines AS (
@@ -408,7 +408,7 @@ def q_syslog_rfc5424_parse(spark, sf_dir):
     )
 
 
-def _syslog5424_oracle() -> str:
+def syslog5424_oracle() -> str:
     return """
 SELECT event_id,
   CAST((event_id % 192) // 8 AS INT) AS syslog_facility,
@@ -446,7 +446,7 @@ SELECT event_id, event_type AS "event.name", user_id AS "enduser.id" FROM events
 """
 
 
-def _resource_detect_oracle() -> str:
+def resource_detect_oracle() -> str:
     import platform
     import socket
 
@@ -729,10 +729,6 @@ FROM events e
 ASOF LEFT JOIN dim d ON e.user_id = d.user_id AND e.ts >= d.ts
 """
 
-
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
 
 def q_span_context_transform(spark, sf_dir):
     """transformprocessor trace_statements on the first-class span context
@@ -1051,64 +1047,3 @@ SELECT conv_id, turn_idx,
 FROM transcripts_cte
 """
 )
-
-
-CATALOG2_QUERIES = {
-    "logs_transform": q_logs_transform,
-    "span_rename": q_span_rename,
-    "span_context_transform": q_span_context_transform,
-    "metric_context_transform": q_metric_context_transform,
-    "spanevent_context_transform": q_spanevent_context_transform,
-    "redact_attributes": q_redact_attributes,
-    "group_by_trace": q_group_by_trace,
-    "span_metrics_exemplars": q_span_metrics_exemplars,
-    "tail_sampling": q_tail_sampling,
-    "tail_sampling_policies": q_tail_sampling_policies,
-    "service_graph": q_service_graph,
-    "exceptions_connector": q_exceptions,
-    "metrics_calculate": q_metrics_calculate,
-    "aggregate_labels": q_aggregate_labels,
-    "aggregate_label_values": q_aggregate_label_values,
-    "syslog_parse": q_syslog_parse,
-    "syslog_rfc5424_parse": q_syslog_rfc5424_parse,
-    "schema_translate": q_schema_translate,
-    "resource_detect": q_resource_detect,
-    "severity_map": q_severity_map,
-    "container_parse": q_container_parse,
-    "uri_parse": q_uri_parse,
-    "count_with_defaults": q_count_with_defaults,
-    "signal_to_metrics": q_signal_to_metrics,
-    "range_lookup_geoip": q_range_lookup,
-    "asof_join_scd": q_asof_join,
-    "span_metrics_exponential": q_span_metrics_exponential,
-}
-
-CATALOG2_ORACLES = {
-    "logs_transform": O_LOGS_TRANSFORM,
-    "span_rename": O_SPAN_RENAME,
-    "span_context_transform": O_SPAN_CONTEXT_TRANSFORM,
-    "metric_context_transform": O_METRIC_CONTEXT_TRANSFORM,
-    "spanevent_context_transform": O_SPANEVENT_CONTEXT,
-    "redact_attributes": O_REDACT,
-    "group_by_trace": O_GROUP_BY_TRACE,
-    "span_metrics_exemplars": O_SPAN_EXEMPLARS,
-    "tail_sampling": O_TAIL_SAMPLING,
-    "tail_sampling_policies": O_TAIL_POLICIES,
-    "service_graph": O_SERVICE_GRAPH,
-    "exceptions_connector": O_EXCEPTIONS,
-    "metrics_calculate": O_METRICS_CALCULATE,
-    "aggregate_labels": O_AGGREGATE_LABELS,
-    "aggregate_label_values": O_AGGREGATE_LABEL_VALUES,
-    "syslog_parse": _syslog_oracle(),
-    "syslog_rfc5424_parse": _syslog5424_oracle(),
-    "schema_translate": O_SCHEMA_TRANSLATE,
-    "resource_detect": _resource_detect_oracle(),
-    "severity_map": O_SEVERITY_MAP,
-    "container_parse": O_CONTAINER_PARSE,
-    "uri_parse": O_URI_PARSE,
-    "count_with_defaults": O_COUNT_WITH_DEFAULTS,
-    "signal_to_metrics": O_SIGNAL_TO_METRICS,
-    "range_lookup_geoip": O_RANGE_LOOKUP,
-    "asof_join_scd": O_ASOF_JOIN,
-    "span_metrics_exponential": O_SPAN_METRICS_EXP,
-}

@@ -511,24 +511,3 @@ SELECT 'calls' AS metric_name, window_id,
        CAST(sum(v) AS BIGINT) AS value_int
 FROM s1 GROUP BY 1, 2, 3
 """
-
-
-METRICFN_QUERIES = {
-    "aggregate_on_attrs_stmt": q_aggregate_on_attrs_stmt,
-    "metric_convert_gauge_sum": q_metric_convert_gauge_sum,
-    "extract_histogram_sum_count": q_extract_histogram_sum_count,
-    "summary_convert_sums": q_summary_convert_sums,
-    "copy_scale_metric": q_copy_scale_metric,
-    "expo_to_explicit_upper": q_expo_to_explicit_upper,
-    "expo_to_explicit_uniform": q_expo_to_explicit_uniform,
-}
-
-METRICFN_ORACLES = {
-    "aggregate_on_attrs_stmt": O_AGGREGATE_ON_ATTRS_STMT,
-    "metric_convert_gauge_sum": O_METRIC_CONVERT_GAUGE_SUM,
-    "extract_histogram_sum_count": O_EXTRACT_HISTOGRAM_SUM_COUNT,
-    "summary_convert_sums": O_SUMMARY_CONVERT_SUMS,
-    "copy_scale_metric": O_COPY_SCALE_METRIC,
-    "expo_to_explicit_upper": O_EXPO_TO_EXPLICIT_UPPER,
-    "expo_to_explicit_uniform": O_EXPO_TO_EXPLICIT_UNIFORM,
-}

@@ -232,7 +232,7 @@ def q_lang_id(spark, sf_dir):
     return docs.select("doc_id", text_fns.lang_id(F.col("text")).alias("lang_pred"))
 
 
-def _lang_id_oracle() -> str:
+def lang_id_oracle() -> str:
     hits = ",\n    ".join(
         f"len(regexp_extract_all(lower(text), '\\b({'|'.join(text_fns.STOPWORDS[lang])})\\b')) AS h_{lang}"
         for lang in sorted(text_fns.STOPWORDS)
@@ -319,7 +319,7 @@ _HX = (
 _P31 = (1 << 31) - 1
 
 
-def _minhash_lsh_oracle(n=_JAC_N, num_hashes=64, bands=16, max_bucket=200) -> str:
+def minhash_lsh_oracle(n=_JAC_N, num_hashes=64, bands=16, max_bucket=200) -> str:
     params = dedupe._hash_params(num_hashes, seed=42)
     rpb = num_hashes // bands
     mins = ",\n    ".join(
@@ -382,9 +382,9 @@ def q_minhash_incremental(spark, sf_dir):
     )
 
 
-def _minhash_incremental_oracle() -> str:
+def minhash_incremental_oracle() -> str:
     return (
-        "SELECT id_a, id_b FROM (" + _minhash_lsh_oracle() + ") "
+        "SELECT id_a, id_b FROM (" + minhash_lsh_oracle() + ") "
         "WHERE id_a % 5 = 0 OR id_b % 5 = 0"
     )
 
@@ -398,9 +398,9 @@ def q_dedup_components(spark, sf_dir):
     return dedupe.connected_components(pairs)
 
 
-def _components_oracle() -> str:
+def components_oracle() -> str:
     return f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_oracle()}),
+WITH RECURSIVE pairs AS ({minhash_lsh_oracle()}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION
@@ -425,7 +425,7 @@ def q_simhash_docs(spark, sf_dir):
     return dedupe.simhash(docs, bits=_SIM_BITS, base_hash="md5_48")
 
 
-def _simhash_oracle() -> str:
+def simhash_oracle() -> str:
     hx = _HX.format(s="t")
     terms = "\n    + ".join(
         f"CASE WHEN list_sum(list_transform(hv, h -> "
@@ -457,7 +457,7 @@ def q_fingerprint_docs(spark, sf_dir):
     )
 
 
-def _fingerprint_oracle(n=8) -> str:
+def fingerprint_oracle(n=8) -> str:
     hx = _HX.format(s="s")
     return f"""
 WITH sh AS (
@@ -525,7 +525,7 @@ def q_ann_lsh(spark, sf_dir):
     )
 
 
-def _ann_lsh_oracle() -> str:
+def ann_lsh_oracle() -> str:
     planes = similarity._hyperplanes(_DIM, _NUM_PLANES, seed=7)
     bucket_terms = " + ".join(
         f"(CASE WHEN list_dot_product(v, {p}) > 0 THEN {1 << i} ELSE 0 END)"
@@ -649,7 +649,7 @@ def q_ann_ivf_recall(spark, sf_dir):
     )
 
 
-def _ann_ivf_recall_oracle() -> str:
+def ann_ivf_recall_oracle() -> str:
     ids = ", ".join(str(i) for i in _IVF_SEED_IDS)
     d = _DIM
     dist = (
@@ -785,7 +785,7 @@ def q_embedding_near_dup(spark, sf_dir):
     )
 
 
-def _near_dup_oracle() -> str:
+def near_dup_oracle() -> str:
     planes = similarity._hyperplanes(_DIM, _NUM_PLANES, seed=7)
     bucket_terms = " + ".join(
         f"(CASE WHEN list_dot_product(v, {p}) > 0 THEN {1 << i} ELSE 0 END)"
@@ -1105,7 +1105,7 @@ def q_curation_pipeline(spark, sf_dir):
     return survivors.select("doc_id")
 
 
-def _curation_oracle() -> str:
+def curation_oracle() -> str:
     stop = "|".join(text_fns.STOPWORDS["en"])
     lang_hits = {
         lang: f"len(regexp_extract_all(lower(text), '\\b({'|'.join(text_fns.STOPWORDS[lang])})\\b'))"
@@ -1172,15 +1172,12 @@ SELECT doc_id FROM kept WHERE doc_id NOT IN (SELECT doc_id FROM dupes)
 
 
 # ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
 # training-batch assembly: sequence packing + data mixing
 # ---------------------------------------------------------------------------
 
 _PACK_BUDGET = 256
 _PACK_SHARDS = 16
+O_PACK_SEQUENCES = packing.pack_oracle_sql(_PACK_BUDGET, _PACK_SHARDS)
 _MIX_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25}
 _MIX_DEFAULT = 0.1
 
@@ -1341,7 +1338,7 @@ def q_dataset_split(spark, sf_dir):
     return packing.dataset_split(docs).select("doc_id", "source", "split")
 
 
-def _dataset_split_oracle() -> str:
+def dataset_split_oracle() -> str:
     hx = _HX.format(s="'split7' || CAST(doc_id AS VARCHAR)")
     return f"""
 SELECT doc_id, source,
@@ -1352,7 +1349,7 @@ FROM documents
 """
 
 
-def _mix_sample_oracle() -> str:
+def mix_sample_oracle() -> str:
     hx = _HX.format(s="'mix42' || CAST(doc_id AS VARCHAR)")
     whens = " ".join(
         f"WHEN source = '{k}' THEN {int(v * 1_000_000)}"
@@ -1378,7 +1375,7 @@ def q_fixed_stratum_sample(spark, sf_dir):
     )
 
 
-def _fixed_stratum_oracle() -> str:
+def fixed_stratum_oracle() -> str:
     hx = _HX.format(s="'fix13' || CAST(doc_id AS VARCHAR)")
     return f"""
 SELECT doc_id, source FROM (
@@ -1402,7 +1399,7 @@ def q_repeated_spans(spark, sf_dir):
     return dedupe.repeated_ngram_spans(docs, n=_SPAN_N, min_docs=2)
 
 
-def _repeated_spans_oracle() -> str:
+def repeated_spans_oracle() -> str:
     n = _SPAN_N
     return f"""
 WITH toks AS (
@@ -1454,7 +1451,7 @@ def q_semdedup(spark, sf_dir):
     )
 
 
-def _semdedup_oracle() -> str:
+def semdedup_oracle() -> str:
     ids = ", ".join(str(i) for i in _IVF_SEED_IDS)
     d = _DIM
     dist = (
@@ -1528,7 +1525,7 @@ def q_bm25_topk(spark, sf_dir):
     )
 
 
-def _bm25_oracle() -> str:
+def bm25_oracle() -> str:
     vals = ", ".join(f"({i}, '{t}')" for i, t in _BM25_QUERIES)
     return f"""
 WITH q(query_id, query_text) AS (
@@ -1785,7 +1782,7 @@ def q_training_export(spark, sf_dir):
     )
 
 
-def _training_export_oracle() -> str:
+def training_export_oracle() -> str:
     split_hx = _HX.format(s="'split7' || CAST(doc_id AS VARCHAR)")
     shuf_hx = _HX.format(s="'shuf:' || CAST(doc_id AS VARCHAR)")
     return rf"""
@@ -2088,104 +2085,3 @@ SELECT page_id,
   END AS kept_md5
 FROM r GROUP BY page_id
 """
-
-
-TRAINING_QUERIES = {
-    "c4_clean": q_c4_clean,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "paragraph_dedup": q_paragraph_dedup,
-    "lm_score_docs": q_lm_score,
-    "ccnet_buckets": q_ccnet_buckets,
-    "unimax_mix": q_unimax_mix,
-    "bpe_pair_counts": q_bpe_pairs,
-    "dsir_select": q_dsir_select,
-    "shard_shuffle": q_shard_shuffle,
-    "dataset_manifest": q_dataset_manifest,
-    "url_filter": q_url_filter,
-    "training_export": q_training_export,
-    "bm25_topk": q_bm25_topk,
-    "pack_sequences": q_pack_sequences,
-    "mix_sample_docs": q_mix_sample_docs,
-    "semdedup": q_semdedup,
-    "repeated_spans": q_repeated_spans,
-    "fixed_stratum_sample": q_fixed_stratum_sample,
-    "mix_temperature_docs": q_mix_temperature_docs,
-    "dataset_split": q_dataset_split,
-    "exact_dedup": q_exact_dedup,
-    "fuzzy_exact_dedup": q_fuzzy_exact_dedup,
-    "doc_quality": q_doc_quality,
-    "doc_repetition": q_doc_repetition,
-    "doc_tfidf": q_doc_tfidf,
-    "token_counts": q_token_counts,
-    "lang_id": q_lang_id,
-    "ngram_jaccard_pairs": q_ngram_jaccard,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "minhash_incremental": q_minhash_incremental,
-    "simhash_docs": q_simhash_docs,
-    "fingerprint_docs": q_fingerprint_docs,
-    "ann_cosine_topk": q_ann_bruteforce,
-    "ann_cosine_lsh": q_ann_lsh,
-    "ann_cosine_ivf": q_ann_ivf,
-    "ann_ivf_fullprobe": q_ann_ivf_fullprobe,
-    "ann_ivf_recall": q_ann_ivf_recall,
-    "ann_quantized_topk": q_ann_quantized_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "multimodal_features": q_multimodal_features,
-    "frame_sample_plan": q_frame_sample_plan,
-    "curation_pipeline": q_curation_pipeline,
-    "pii_scrub_docs": q_pii_scrub_docs,
-    "chunk_documents": q_chunk_documents,
-    "decontaminate_docs": q_decontaminate_docs,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "dedup_components": q_dedup_components,
-}
-
-TRAINING_ORACLES = {
-    "c4_clean": O_C4_CLEAN,
-    "winnow_fingerprints": O_WINNOW_FINGERPRINTS,
-    "paragraph_dedup": O_PARAGRAPH_DEDUP,
-    "lm_score_docs": O_LM_SCORE,
-    "ccnet_buckets": O_CCNET_BUCKETS,
-    "unimax_mix": O_UNIMAX,
-    "bpe_pair_counts": O_BPE_PAIRS,
-    "dsir_select": O_DSIR,
-    "shard_shuffle": O_SHARD_SHUFFLE,
-    "dataset_manifest": O_DATASET_MANIFEST,
-    "url_filter": O_URL_FILTER,
-    "training_export": _training_export_oracle(),
-    "bm25_topk": _bm25_oracle(),
-    "pack_sequences": packing.pack_oracle_sql(_PACK_BUDGET, _PACK_SHARDS),
-    "mix_sample_docs": _mix_sample_oracle(),
-    "semdedup": _semdedup_oracle(),
-    "repeated_spans": _repeated_spans_oracle(),
-    "fixed_stratum_sample": _fixed_stratum_oracle(),
-    "mix_temperature_docs": O_MIX_TEMPERATURE,
-    "dataset_split": _dataset_split_oracle(),
-    "exact_dedup": O_EXACT_DEDUP,
-    "fuzzy_exact_dedup": O_FUZZY_EXACT_DEDUP,
-    "doc_quality": O_DOC_QUALITY,
-    "doc_repetition": O_DOC_REPETITION,
-    "doc_tfidf": O_DOC_TFIDF,
-    "token_counts": O_TOKEN_COUNTS,
-    "lang_id": _lang_id_oracle(),
-    "ngram_jaccard_pairs": O_NGRAM_JACCARD,
-    "minhash_lsh_pairs": _minhash_lsh_oracle(),
-    "minhash_incremental": _minhash_incremental_oracle(),
-    "simhash_docs": _simhash_oracle(),
-    "fingerprint_docs": _fingerprint_oracle(),
-    "ann_cosine_topk": O_ANN_BRUTEFORCE,
-    "ann_cosine_lsh": _ann_lsh_oracle(),
-    # full-probe IVF == exact brute force (metamorphic identity)
-    "ann_ivf_fullprobe": O_ANN_BRUTEFORCE,
-    # pruned IVF with an injected deterministic quantizer: full recall oracle
-    "ann_ivf_recall": _ann_ivf_recall_oracle(),
-    "ann_quantized_topk": O_ANN_QUANTIZED,
-    "embedding_near_dup": _near_dup_oracle(),
-    # multimodal: pandas-UDF stub features -> rows-only
-    "curation_pipeline": _curation_oracle(),
-    "pii_scrub_docs": O_PII_SCRUB,
-    "chunk_documents": O_CHUNK_DOCS,
-    "decontaminate_docs": O_DECONTAMINATE,
-    "decontaminate_bloom": O_DECONTAMINATE_BLOOM,
-    "dedup_components": _components_oracle(),
-}

@@ -56,6 +56,14 @@ def test_full_registry_fits_tail_capture():
     )
 
 
+def test_bench_queries_are_registered():
+    # a renamed query would otherwise surface only as a KeyError mid-bench
+    from __spark_entry__ import REGISTRY
+
+    registered = {name for name, _, _ in REGISTRY}
+    assert [n for n in bench.BENCH_QUERIES if n not in registered] == []
+
+
 def test_overflow_sheds_cheapest_first():
     # mirror of the guard loop in bench.main(): when over budget, the
     # smallest medians go first so expensive (informative) entries and the

@@ -26,6 +26,8 @@ def test_registry_contract_pinned():
     The wiring hash also covers the rows-only queries, which the oracle
     sweep below cannot check."""
     assert len(QUERIES) == 117
+    # a duplicate REGISTRY row would collapse silently into the dict
+    assert len(entry_mod.REGISTRY) == len(QUERIES)
     assert len(ORACLES) == 114
     assert set(ORACLES) < set(QUERIES)
     assert set(QUERIES) - set(ORACLES) == {

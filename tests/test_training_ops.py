@@ -534,9 +534,11 @@ def test_minhash_incremental_matches_full_restriction(spark):
     assert inc2 == expected
 
 
-def test_semdedup_min_id_keep_rule(spark):
+@pytest.mark.parametrize("id_type", ["long", "int", "string"])
+def test_semdedup_min_id_keep_rule(spark, id_type):
     """semdedup keeps the min-id member of every intra-cluster eps-group
-    and never drops across clusters (functions/similarity.py semdedup)."""
+    and never drops across clusters (functions/similarity.py semdedup),
+    whatever the id type: "d1".."d7" sort as 1..7 do."""
     from open_telemetry_opentelemetry_collector_contrib_spark.functions import (
         similarity,
     )
@@ -552,17 +554,20 @@ def test_semdedup_min_id_keep_rule(spark):
         (6, [0.0, 1.0, 0.02, 0.0]),   # near-dup of 5 -> dropped
         (7, [0.0, 0.1, 1.0, 0.5]),    # cluster 1, dissimilar: kept
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r.vec_id: r for r in similarity.semdedup(
-        df, centroids, eps_sq_num=98, eps_sq_den=100
-    ).collect()}
+    key = (lambda i: f"d{i}") if id_type == "string" else (lambda i: i)
+    df = spark.createDataFrame(
+        [(key(i), v) for i, v in rows], f"vec_id {id_type}, embedding array<double>"
+    )
+    res = similarity.semdedup(df, centroids, eps_sq_num=98, eps_sq_den=100)
+    assert res.schema["vec_id"].dataType == df.schema["vec_id"].dataType
+    out = {r.vec_id: r for r in res.collect()}
     assert len(out) == len(rows)  # every doc gets a verdict
     kept = {i for i, r in out.items() if r.kept}
-    assert kept == {1, 4, 5, 7}
+    assert kept == {key(i) for i in (1, 4, 5, 7)}
     # cluster assignment sanity: groups land where their centroid is
-    assert out[1].cluster == 0 and out[5].cluster == 1
+    assert out[key(1)].cluster == 0 and out[key(5)].cluster == 1
     # min-id rule: the smallest id of each eps-group is the one kept
-    assert not out[2].kept and not out[3].kept and not out[6].kept
+    assert not out[key(2)].kept and not out[key(3)].kept and not out[key(6)].kept
 
 
 def test_nearest_centroid_null_and_short_vectors(spark):
