@@ -90,7 +90,11 @@ def _double_bits_py(s):
 def _fnv1a64_udf(col: Column) -> Column:
     from pyspark.sql.functions import pandas_udf
 
-    return pandas_udf(_fnv1a64_py, "long")(col)
+    # nondeterministic only to Catalyst: a filter on the output (say an
+    # aggregate's required-key filter) is then not pushed below the
+    # projection as a copy of the UDF, so each row crosses the Python
+    # boundary once instead of twice
+    return pandas_udf(_fnv1a64_py, "long").asNondeterministic()(col)
 
 
 def _double_bits_udf(col: Column) -> Column:
@@ -106,7 +110,8 @@ def _double_bits_udf(col: Column) -> Column:
         out[s.isna()] = pd.NA
         return out
 
-    return pandas_udf(f, "long")(col)
+    # evaluated once per row, as _fnv1a64_udf
+    return pandas_udf(f, "long").asNondeterministic()(col)
 
 
 def _lit_of(node, what: str):
@@ -454,8 +459,8 @@ def call_converter(call: FuncCall, ctx: LogContext) -> TypedCol:
     if name == "SHA512":
         return TypedCol(F.sha2(val(0).col.cast("string"), 512), "string")
     if name == "FNV":
-        # exact Go hash/fnv FNV-1a 64 (func_fnv.go) — numpy uint64 wraparound
-        # in an Arrow-batched UDF; rarely on a hot path, exactness wins
+        # exact Go hash/fnv FNV-1a 64 (func_fnv.go) — a per-byte loop in an
+        # Arrow-batched UDF; the boundary crossing, not the loop, is its cost
         return TypedCol(_fnv1a64_udf(val(0).col.cast("string")), "int")
     if name == "Hex":
         # func_hex.go hex-encodes the Go value's bytes: int64 -> 8 bytes,

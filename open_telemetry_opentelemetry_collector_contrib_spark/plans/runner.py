@@ -8,6 +8,8 @@ North-rule requirements implemented here:
 - **per-sink tables**: one routed pass, fanned out by ``sinks.write_sinks``
   under ``<out>/sinks/route=<name>/chunk=<id>/`` (fileexporter group_by
   analog — `exporter/fileexporter/grouping_file_exporter.go:116-152`);
+  the chunk's counts are written alongside the sinks, concurrently, off the
+  same cached routed frame;
 - **per-partition lineage + metrics**: the source file list is split into
   chunks; each chunk commit records its files, row metrics (parsed/routed/
   dropped/per-route) and status in ``<out>/lineage/``. Metrics come from
@@ -148,15 +150,16 @@ class PipelineRunner:
                 dst = os.path.join(self.out_dir, path, f"chunk={chunk_id:05d}")
                 df.write.mode("overwrite").parquet(dst)
 
-        with sinks_io.write_sinks(
+        sinks_io.write_sinks(
             observed,
             flagship.SINKS,
             lambda df, s: write(df, f"route_{s}", os.path.join("sinks", f"route={s}")),
-        ) as ordered:
-            # aggregate stage off the cached ordered frame: salted two-phase
-            # count to absorb hot conv_ids, written per chunk (delta
-            # temporality, like the count connector's per-batch emission)
-            write(self._salted_counts(ordered), "counts", "counts")
+            # aggregate stage off the cached ordered frame, written alongside
+            # the sinks: salted two-phase count to absorb hot conv_ids, per
+            # chunk (delta temporality, like the count connector's per-batch
+            # emission)
+            lambda ordered: write(self._salted_counts(ordered), "counts", "counts"),
+        )
         metrics = {k: int(v) for k, v in obs.get.items()}
 
         res = ChunkResult(

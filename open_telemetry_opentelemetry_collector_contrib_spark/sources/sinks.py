@@ -14,13 +14,21 @@ The reference's fileexporter writes JSON/proto files with rotation and a
 caller's job (repartition + sortWithinPartitions BEFORE calling, and do not
 combine with partitionBy, whose writer re-sorts by partition columns
 unstably — see ``write_sinks``, which fans routed rows out that way).
+
+``write_sinks`` runs its writes concurrently, one thread per write and no
+pool-size setting, waits for all of them and re-raises the first failure.
+It is the package's only place that runs Spark jobs off the caller's
+thread (``tests/test_source_rules.py`` enforces this), because its threads
+carry the caller's job group, tags and SQL local properties.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -110,13 +118,15 @@ def write_table(
     w.parquet(target)
 
 
-@contextmanager
 def write_sinks(
-    routed: DataFrame, sinks: list[str], write: Callable[[DataFrame, str], None]
-) -> Iterator[DataFrame]:
+    routed: DataFrame,
+    sinks: list[str],
+    write: Callable[[DataFrame, str], None],
+    *also: Callable[[DataFrame], None],
+) -> None:
     """Routing-connector fan-out: ``write(rows, sink)`` once per sink, with
-    the ``route`` column dropped, then yield the cached ordered frame for
-    further writes off the same single pass.
+    the ``route`` column dropped, and ``f(ordered)`` for each further write
+    ``f`` in ``also`` off the same cached ordered frame.
 
     Rows are repartitioned by conv_id and sorted (conv_id, turn_idx) within
     partitions: the deterministic per-sink row order contract. A single
@@ -125,18 +135,36 @@ def write_sinks(
     per-sink filtered writes off the cache keep the upstream compute
     single-pass — the reference's group-before-dispatch,
     `routingconnector/logs.go:119-124`. On Iceberg the equivalent is one
-    fanout write with a sort order spec. The cache is dropped on exit, also
-    when a write raises.
+    fanout write with a sort order spec.
+
+    Every write is submitted at once, one pool thread per write (there is
+    no pool-size knob), like the reference's exporters each draining their
+    own queue. Spark's block locks build each cached partition once, so the
+    writes share one shuffle and one cache build, and an ``observe()``
+    upstream still counts every row once. Each thread runs under the
+    caller's job group, job tags and SQL local properties
+    (``inheritable_thread_target``), so the writes' jobs are attributed to
+    the caller. The call returns when every write has finished; if any
+    raised, the first error in submission order (sinks, then ``also``) is
+    re-raised after all the others have run. The cache is dropped on the
+    way out, also when a write raises.
     """
+    spark = routed.sparkSession
     ordered = (
         routed.repartition(F.col("conv_id"))
         .sortWithinPartitions("conv_id", "turn_idx")
         .persist()
     )
     try:
-        for sink in sinks:
-            write(ordered.filter(F.col("route") == sink).drop("route"), sink)
-        yield ordered
+        tasks = [
+            partial(write, ordered.filter(F.col("route") == sink).drop("route"), sink)
+            for sink in sinks
+        ] + [partial(f, ordered) for f in also]
+        inherit = inheritable_thread_target(spark)
+        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+            futures = [pool.submit(inherit(task)) for task in tasks]
+        for future in futures:
+            future.result()
     finally:
         ordered.unpersist()
 

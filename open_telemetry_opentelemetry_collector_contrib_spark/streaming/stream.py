@@ -147,8 +147,9 @@ def route_fan_out_stream(
     and written per sink (the full exporter fan-out under streaming).
 
     foreachBatch is the streaming analog of a runner chunk: one routed
-    frame per batch, fanned out by ``sinks.write_sinks`` (per-sink filtered
-    writes off a cache), batch id recorded for idempotent replay.
+    frame per batch, fanned out by ``sinks.write_sinks`` (concurrent
+    per-sink filtered writes off one cache), batch id recorded for
+    idempotent replay.
     """
     import os
 
@@ -159,8 +160,7 @@ def route_fan_out_stream(
             dst = os.path.join(out_dir, f"route={sink}", f"batch={batch_id:05d}")
             df.write.mode("overwrite").parquet(dst)
 
-        with write_sinks(batch_df, flagship.SINKS, write):
-            pass
+        write_sinks(batch_df, flagship.SINKS, write)
 
     q = (
         routed_stream.writeStream.foreachBatch(write_batch)

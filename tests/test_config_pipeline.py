@@ -265,3 +265,22 @@ def test_lookup_stage_joins_local_dimension(spark, tmp_path):
         ("b", 3, 2, 1.5, False),
         ("c", 4, None, None, None),
     ]
+
+
+def test_fnv_aggregate_key_crosses_the_python_boundary_once(spark):
+    """An OTTL ``FNV`` output used as an aggregate key is evaluated by one
+    Arrow UDF node: the aggregate's required-key filter stays above the
+    transform instead of being pushed below it as a second copy of the UDF."""
+    spec = {
+        "processors": [
+            {"type": "transform", "statements": ['set(attributes["conv_hash"], FNV(conv_id))']},
+        ],
+        "aggregate": {"type": "count", "keys": ["conv_hash", "role"], "window_s": 86400},
+    }
+    src = pipeline.parsed(spark, SF_UNIT)
+    out = cfg.build(spark, spec, src)
+    tree = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    ).split("\n\n")[0]
+    assert tree.count("ArrowEvalPython") == 1
+    assert out.agg(F.sum("n")).first()[0] == src.count()

@@ -290,10 +290,12 @@ def test_runner_iceberg_crash_resume_idempotent(spark, tmp_path, monkeypatch):
     transcripts(spark, SF_UNIT).limit(1000).write.parquet(src)
 
     calls = []
-    fail_at = {"n": 3}  # crash on the 3rd sink write of the first attempt
+    # crash on one named sink of the first attempt (the writes run
+    # concurrently, so there is no n-th write to crash on)
+    fail_on = {"target": "cat.db.route_human"}
 
     def fake_write_table(df, target, mode="overwrite", group_by=None, fmt="auto"):
-        if fail_at["n"] is not None and len(calls) == fail_at["n"]:
+        if target == fail_on["target"]:
             raise RuntimeError("simulated crash mid-chunk")
         df.count()  # a real write executes the plan (feeds the Observation)
         calls.append({"target": target, "mode": mode})
@@ -311,7 +313,7 @@ def test_runner_iceberg_crash_resume_idempotent(spark, tmp_path, monkeypatch):
     partial = len(calls)
     assert 0 < partial < len(flagship.SINKS) + 1
 
-    fail_at["n"] = None  # recovery run
+    fail_on["target"] = None  # recovery run
     results = r.run(resume=True)
     assert len(results) == 1 and r.completed_chunks() == {0}
     # every write (partial-attempt AND re-run) is an idempotent partition

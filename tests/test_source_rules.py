@@ -6,6 +6,11 @@
 - The flagship stages have one definition: only ``plans/pipeline.py`` calls
   ``parse_transcripts``, ``role_dim`` and ``tool_dim``; everything else
   composes parse -> enrich -> route through ``pipeline.route_transcripts``.
+- Spark work runs off the caller's thread in one place: only
+  ``sources/sinks.py`` names ``ThreadPoolExecutor``, ``Thread`` or
+  ``InheritableThread`` (imported, called or subclassed). Its
+  ``write_sinks`` carries the caller's job group, tags and SQL local
+  properties into its threads; a bare thread drops them.
 
 The scan reads the syntax tree, so docstrings and comments that name the
 calls are fine.
@@ -25,6 +30,9 @@ SOURCES = sorted([*PKG.rglob("*.py"), *REPO.glob("*.py"), *(REPO / "scripts").gl
 ROW_FRAME_CALLS = {"createDataFrame", "parallelize"}
 LOCAL_FRAME = (PKG / "sources" / "tables.py", "local_frame")
 FLAGSHIP = (PKG / "plans" / "pipeline.py", None)
+SINKS = (PKG / "sources" / "sinks.py", None)
+# flagged wherever they are named, not only where they are called
+THREADS = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
 # call name -> the only places it may be called: (file, enclosing top-level
 # function), where None allows any function of the file
 ALLOWED = {
@@ -33,6 +41,7 @@ ALLOWED = {
     "parse_transcripts": {FLAGSHIP},
     "role_dim": {FLAGSHIP},
     "tool_dim": {FLAGSHIP},
+    **{name: {SINKS} for name in THREADS},
 }
 
 
@@ -48,22 +57,41 @@ class _RuledCalls(ast.NodeVisitor):
 
     visit_AsyncFunctionDef = visit_FunctionDef
 
+    def _found(self, node, hit):
+        self.found.append((node.lineno, hit, self.scope[0] if self.scope else None))
+
     def visit_Call(self, node):
         f = node.func
         name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        if name in ALLOWED:
-            self.found.append((node.lineno, name, self.scope[0] if self.scope else None))
+        if name in ALLOWED.keys() - THREADS:
+            self._found(node, f"{name}()")
         self.generic_visit(node)
+
+    def visit_Name(self, node):
+        if node.id in THREADS:
+            self._found(node, node.id)
+
+    def visit_Attribute(self, node):
+        if node.attr in THREADS:
+            self._found(node, node.attr)
+        self.generic_visit(node)
+
+    def visit_ImportFrom(self, node):
+        for alias in node.names:
+            if alias.name in THREADS:
+                self._found(node, alias.name)
 
 
 def banned_calls(source: str, path: Path, names=ALLOWED.keys()) -> list[str]:
-    """Calls to ``names`` in ``source`` that are outside their allowed places."""
+    """Calls to ``names`` in ``source`` (for ``THREADS``, any mention) that
+    are outside their allowed places."""
     visitor = _RuledCalls()
     visitor.visit(ast.parse(source, filename=str(path)))
     return [
-        f"{path.relative_to(REPO)}:{line} {name}()"
-        for line, name, func in visitor.found
-        if name in names and not {(path, func), (path, None)} & ALLOWED[name]
+        f"{path.relative_to(REPO)}:{line} {hit}"
+        for line, hit, func in visitor.found
+        if (name := hit.removesuffix("()")) in names
+        and not {(path, func), (path, None)} & ALLOWED[name]
     ]
 
 
@@ -104,6 +132,27 @@ def test_scanner_flags_flagship_stage_copies():
     ]
 
 
+def test_scanner_flags_threads_outside_sinks():
+    src = (
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "import threading\n"
+        "def f(jobs, run):\n"
+        "    '''threading.Thread in a docstring is fine'''\n"
+        "    with ThreadPoolExecutor(4) as pool:\n"
+        "        pool.map(run, jobs)\n"
+        "    threading.Thread(target=run).start()\n"
+        "class Worker(pyspark.InheritableThread):\n"
+        "    pass\n"
+    )
+    assert banned_calls(src, PKG / "plans" / "runner.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:1 ThreadPoolExecutor",
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:5 ThreadPoolExecutor",
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:7 Thread",
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/runner.py:8 InheritableThread",
+    ]
+    assert banned_calls(src, PKG / "sources" / "sinks.py") == []
+
+
 def test_no_python_row_frames_outside_local_frame():
     assert len(SOURCES) > 50  # the package was found
     hits = offenders(ROW_FRAME_CALLS)
@@ -111,5 +160,10 @@ def test_no_python_row_frames_outside_local_frame():
 
 
 def test_flagship_stages_defined_once():
-    hits = offenders(ALLOWED.keys() - ROW_FRAME_CALLS)
+    hits = offenders(ALLOWED.keys() - ROW_FRAME_CALLS - THREADS)
     assert hits == [], "compose the stages with pipeline.route_transcripts: " + ", ".join(hits)
+
+
+def test_spark_threads_only_in_sinks():
+    hits = offenders(THREADS)
+    assert hits == [], "run concurrent Spark writes through sinks.write_sinks: " + ", ".join(hits)
