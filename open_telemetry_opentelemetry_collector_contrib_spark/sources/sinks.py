@@ -149,7 +149,6 @@ def write_sinks(
     re-raised after all the others have run. The cache is dropped on the
     way out, also when a write raises.
     """
-    spark = routed.sparkSession
     ordered = (
         routed.repartition(F.col("conv_id"))
         .sortWithinPartitions("conv_id", "turn_idx")
@@ -160,7 +159,7 @@ def write_sinks(
             partial(write, ordered.filter(F.col("route") == sink).drop("route"), sink)
             for sink in sinks
         ] + [partial(f, ordered) for f in also]
-        inherit = inheritable_thread_target(spark)
+        inherit = inheritable_thread_target(routed.sparkSession)
         with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
             futures = [pool.submit(inherit(task)) for task in tasks]
         for future in futures:
