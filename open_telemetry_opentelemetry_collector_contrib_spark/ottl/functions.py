@@ -110,8 +110,7 @@ def _double_bits_udf(col: Column) -> Column:
         out[s.isna()] = pd.NA
         return out
 
-    # evaluated once per row, as _fnv1a64_udf
-    return pandas_udf(f, "long").asNondeterministic()(col)
+    return pandas_udf(f, "long")(col)
 
 
 def _lit_of(node, what: str):

@@ -15,8 +15,9 @@ caller's job (repartition + sortWithinPartitions BEFORE calling, and do not
 combine with partitionBy, whose writer re-sorts by partition columns
 unstably — see ``write_sinks``, which fans routed rows out that way).
 
-``write_sinks`` runs its writes concurrently, one thread per write and no
-pool-size setting, waits for all of them and re-raises the first failure.
+``write_sinks`` builds the cached routed frame once, then runs its writes
+concurrently, one thread per write and no pool-size setting, waits for all
+of them and re-raises the first failure.
 It is the package's only place that runs Spark jobs off the caller's
 thread (``tests/test_source_rules.py`` enforces this), because its threads
 carry the caller's job group, tags and SQL local properties.
@@ -137,17 +138,22 @@ def write_sinks(
     `routingconnector/logs.go:119-124`. On Iceberg the equivalent is one
     fanout write with a sort order spec.
 
-    Every write is submitted at once, one pool thread per write (there is
-    no pool-size knob), like the reference's exporters each draining their
-    own queue. Spark's block locks build each cached partition once, so the
-    writes share one shuffle and one cache build, and an ``observe()``
-    upstream still counts every row once. Each thread runs under the
-    caller's job group, job tags and SQL local properties
-    (``inheritable_thread_target``), so the writes' jobs are attributed to
-    the caller. The call returns when every write has finished; if any
-    raised, the first error in submission order (sinks, then ``also``) is
-    re-raised after all the others have run. The cache is dropped on the
-    way out, also when a write raises.
+    The cache is built first, by one ``count()`` job on the caller's
+    thread. An ``observe()`` upstream keeps the metrics of the first action
+    to finish, and that job is the one that computed every partition, so
+    the metrics count every row once; a write that only read blocks built
+    by another write's still-running tasks could otherwise finish first
+    and report a partial count. The writes then share that one shuffle and
+    cache build.
+
+    Every write is then submitted at once, one pool thread per write (there
+    is no pool-size knob), like the reference's exporters each draining
+    their own queue. Each thread runs under the caller's job group, job
+    tags and SQL local properties (``inheritable_thread_target``), so the
+    writes' jobs are attributed to the caller. The call returns when every
+    write has finished; if any raised, the first error in submission order
+    (sinks, then ``also``) is re-raised after all the others have run. The
+    cache is dropped on the way out, also when a write raises.
     """
     ordered = (
         routed.repartition(F.col("conv_id"))
@@ -155,6 +161,7 @@ def write_sinks(
         .persist()
     )
     try:
+        ordered.count()
         tasks = [
             partial(write, ordered.filter(F.col("route") == sink).drop("route"), sink)
             for sink in sinks

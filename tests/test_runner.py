@@ -43,6 +43,19 @@ def test_metrics_accounting(run_out):
         )
 
 
+def test_chunk_metrics_count_every_row_on_every_run(spark, tmp_path):
+    """The lineage metrics come from an Observation on the fan-out's cached
+    frame, whose writes run concurrently: every run of the same chunk must
+    still count every row once and route each of them to one sink."""
+    src = str(tmp_path / "src")
+    materialize_transcripts(spark, SF_UNIT, src, num_files=1)
+    runner = PipelineRunner(spark, src, str(tmp_path / "out"), num_chunks=1)
+    for _ in range(5):
+        (res,) = runner.run(resume=False)
+        assert res.metrics["rows_in"] == 1000
+        assert res.metrics["rows_in"] == sum(res.metrics[f"route_{s}"] for s in pipeline.SINKS)
+
+
 def test_routed_row_equality_per_sink(run_out, spark):
     """Per-sink rows byte-equal to the flagship (unchunked) route stage,
     under the canonical (conv_id, turn_idx) ordering."""

@@ -1,6 +1,7 @@
 """The fan-out contract of ``sources.sinks.write_sinks``: its concurrent
-writes run under the caller's job group, and one failing sink neither stops
-the others nor leaves the routed frame cached."""
+writes run under the caller's job group, an ``observe()`` upstream counts
+every row, and one failing sink neither stops the others nor leaves the
+routed frame cached."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 import time
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from open_telemetry_opentelemetry_collector_contrib_spark.sources.sinks import write_sinks
@@ -56,6 +58,27 @@ def test_writes_run_in_the_callers_job_group(spark, routed, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     # at least one job per sink write and one for the extra write
     assert len(tracker.getJobIdsForGroup("fan-out-group")) >= len(SINKS) + 1
+
+
+@pytest.mark.parametrize("attempt", range(3))
+def test_observation_counts_every_row_past_a_slow_sink(spark, routed, tmp_path, attempt):
+    """An Observation keeps the metrics of the first action to finish. A
+    slow sink's tasks may have built cached partitions that a fast sink only
+    read; the fast sink's query must not end before those builders report."""
+    write_fast = _parquet_writer(str(tmp_path))
+
+    def slow(s):
+        time.sleep(0.01)
+        return s
+
+    def write(df, sink):
+        if sink == "a":
+            df = df.withColumn("conv_id", F.udf(slow, "string")("conv_id"))
+        write_fast(df, sink)
+
+    obs = Observation(f"fan-out-{attempt}")
+    write_sinks(routed.observe(obs, F.count(F.lit(1)).alias("rows")), SINKS, write)
+    assert obs.get["rows"] == 300
 
 
 def test_failing_sink_lets_the_others_finish(spark, routed, tmp_path):
