@@ -60,24 +60,25 @@ def test_writes_run_in_the_callers_job_group(spark, routed, tmp_path):
     assert len(tracker.getJobIdsForGroup("fan-out-group")) >= len(SINKS) + 1
 
 
-@pytest.mark.parametrize("attempt", range(3))
-def test_observation_counts_every_row_past_a_slow_sink(spark, routed, tmp_path, attempt):
-    """An Observation keeps the metrics of the first action to finish. A
-    slow sink's tasks may have built cached partitions that a fast sink only
-    read; the fast sink's query must not end before those builders report."""
-    write_fast = _parquet_writer(str(tmp_path))
+def test_cache_is_built_before_any_write_starts(spark, routed):
+    """An Observation keeps the metrics of the first action to finish. Every
+    cached partition is built before any write starts, so that action is
+    the one job that computed them all, not a write that only read blocks
+    another write's still-running tasks had built."""
+    storage = spark.sparkContext._jsc.sc()
 
-    def slow(s):
-        time.sleep(0.01)
-        return s
+    def cached_rdds():
+        return {i.id(): (i.numCachedPartitions(), i.numPartitions()) for i in storage.getRDDStorageInfo()}
+
+    before = set(cached_rdds())
+    seen = []
 
     def write(df, sink):
-        if sink == "a":
-            df = df.withColumn("conv_id", F.udf(slow, "string")("conv_id"))
-        write_fast(df, sink)
+        seen.append([n for rdd, (cached, n) in cached_rdds().items() if rdd not in before and cached == n > 0])
 
-    obs = Observation(f"fan-out-{attempt}")
+    obs = Observation("fan-out")
     write_sinks(routed.observe(obs, F.count(F.lit(1)).alias("rows")), SINKS, write)
+    assert len(seen) == len(SINKS) and all(seen), seen
     assert obs.get["rows"] == 300
 
 
