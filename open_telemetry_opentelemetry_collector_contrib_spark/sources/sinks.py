@@ -17,10 +17,10 @@ unstably — see ``write_sinks``, which fans routed rows out that way).
 
 ``write_sinks`` builds the cached routed frame once, then runs its writes
 concurrently, one thread per write and no pool-size setting, waits for all
-of them and re-raises the first failure.
-It is the package's only place that runs Spark jobs off the caller's
-thread (``tests/test_source_rules.py`` enforces this), because its threads
-carry the caller's job group, tags and SQL local properties.
+of them and re-raises the first failure. It is the package's only place
+that runs Spark jobs off the caller's thread (``tests/test_source_rules.py``
+enforces this), because its threads carry the caller's job group, tags and
+SQL local properties.
 """
 
 from __future__ import annotations
