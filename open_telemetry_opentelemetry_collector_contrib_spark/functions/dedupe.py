@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import materialize
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -389,9 +391,8 @@ def _band_and_cap(
     """Explode a signature frame into (id, band, bucket) with the
     hot-bucket cap as ONE window count on the bucket shuffle (vs the old
     groupBy + join-back: an extra aggregate exchange + broadcast per
-    call); persists the filtered frame so the (expensive, interpreted)
-    signature fold materializes once and both join sides read the
-    cache."""
+    call); materializes the filtered frame so the (expensive, interpreted)
+    signature fold runs once and both join sides read it."""
 
     def band_key(b):
         joined = F.array_join(
@@ -417,11 +418,10 @@ def _band_and_cap(
         F.col("bb.bucket").alias("bucket"),
     )
     wsz = Window.partitionBy("band", "bucket")
-    return (
+    return materialize(
         banded.withColumn("__sz", F.count(F.lit(1)).over(wsz))
         .filter(F.col("__sz") <= max_bucket_size)
         .drop("__sz")
-        .persist()
     )
 
 
@@ -591,11 +591,11 @@ def jaccard_verified_pairs_lsh(
     denominators keep full distinct-shingle counts.
     """
     # cand feeds the id-set derivation AND the final scoring join; sets_df
-    # feeds both join sides — persist both or the banded-LSH pipeline and
-    # the collect_set shuffle run twice (measured 2x on the verify stage)
-    cand = minhash_lsh_pairs(
-        df, text_col, id_col, n, num_hashes, bands, seed, max_bucket_size
-    ).persist()
+    # feeds both join sides — materialize both or the banded-LSH pipeline
+    # and the collect_set shuffle run twice (measured 2x on the verify stage)
+    cand = materialize(
+        minhash_lsh_pairs(df, text_col, id_col, n, num_hashes, bands, seed, max_bucket_size)
+    )
     # shingle-frequency cap is computed over the FULL corpus (must mirror
     # the exact path's cap), but the per-doc shingle SETS — the expensive
     # collect_set — are built only for docs that appear in a candidate pair
@@ -610,10 +610,12 @@ def jaccard_verified_pairs_lsh(
         df.join(cand_ids, id_col, "left_semi"), text_col, id_col, n
     )
     capped = cand_sh.join(freq.filter(F.col("freq") <= max_shingle_freq), "shingle")
-    sets_df = capped.groupBy(id_col).agg(
-        F.collect_set("shingle").alias("sh_set"),
-        F.first("shingle_count").alias("n_sh"),
-    ).persist()
+    sets_df = materialize(
+        capped.groupBy(id_col).agg(
+            F.collect_set("shingle").alias("sh_set"),
+            F.first("shingle_count").alias("n_sh"),
+        )
+    )
     a = sets_df.select(
         F.col(id_col).alias("id_a"), F.col("sh_set").alias("sa"), F.col("n_sh").alias("ca")
     )
@@ -653,10 +655,8 @@ def connected_components(
     reads a convergence COUNT, never data.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
+    edges = materialize(
+        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     )
     labels = edges.select(F.col("src").alias("v")).distinct().withColumn(
         "label", F.col("v")
@@ -680,7 +680,6 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
     return labels.select(F.col("v").alias("node"), F.col("label").alias("component"))
 
 

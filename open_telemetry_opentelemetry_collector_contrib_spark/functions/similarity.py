@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import materialize
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -208,8 +210,8 @@ def cosine_topk_ivf(
     quantizer the PRUNED search becomes exactly reproducible in SQL (the
     ``ann_ivf_recall`` oracle relies on this).
 
-    Scale: the quantizer is fit on a persisted deterministic SAMPLE of at
-    most ~``fit_max`` vectors (quantizer quality needs thousands of vectors,
+    Scale: the quantizer is fit on a deterministic SAMPLE of at most
+    ~``fit_max`` vectors (quantizer quality needs thousands of vectors,
     not the full corpus — at 100 TB a full-corpus fit would be one multi-pass
     scan per KMeans iteration), then assignment is a single map-side pass
     over the corpus. Stored partitioned by cluster id, a query touches
@@ -236,19 +238,11 @@ def cosine_topk_ivf(
         # per-partition top-fit_max then one driver merge, one pass over the
         # corpus regardless of size (and no count() job, so non-parquet
         # sources pay nothing extra). When the corpus is smaller than
-        # fit_max it keeps everything. Persist so each KMeans iteration
-        # re-reads the 4k-row sample, not the corpus.
-        fit_df = (
-            fit_corpus.orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(fit_max)
-            .persist()
-        )
-        try:
-            model = KMeans(
-                k=num_clusters, seed=seed, featuresCol="__features"
-            ).fit(fit_df)
-        finally:
-            fit_df.unpersist()
+        # fit_max it keeps everything. KMeans caches its own input rows when
+        # handed an uncached frame, so each iteration re-reads the sample,
+        # not the corpus.
+        fit_df = fit_corpus.orderBy(F.xxhash64(F.col(id_col), F.lit(seed))).limit(fit_max)
+        model = KMeans(k=num_clusters, seed=seed, featuresCol="__features").fit(fit_df)
         centroids = [list(c) for c in model.clusterCenters()]
     # assignment is one map-side pass: argmin over the (small) centroid
     # table — same shape for fitted and injected quantizers, no MLlib on
@@ -394,16 +388,15 @@ def embedding_near_dup_pairs(
     base = embeddings.select(
         F.col(id_col), _as_double(F.col(vec_col)).alias("__v")
     ).withColumn("__bucket", lsh_bucket(F.col("__v"), planes))
-    # hot-bucket cap as one window count; persist the filtered frame so the
-    # (interpreted HOF) bucket fold runs once and both join sides read cache
+    # hot-bucket cap as one window count; materialize the filtered frame so
+    # the (interpreted HOF) bucket fold runs once and both join sides read it
     from pyspark.sql import Window
 
     wsz = Window.partitionBy("__bucket")
-    base = (
+    base = materialize(
         base.withColumn("__sz", F.count(F.lit(1)).over(wsz))
         .filter(F.col("__sz") <= max_bucket_size)
         .drop("__sz")
-        .persist()
     )
     a = base.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va"), "__bucket")
     b = base.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb"), "__bucket")
@@ -456,8 +449,6 @@ def semdedup(
     corpus = embeddings.select(
         F.col(id_col), _as_double(F.col(vec_col)).alias("__v")
     )
-
-    from ..sources.tables import materialize
 
     # materialized once: feeds the pair stage AND the final kept-join
     # (localCheckpoint, not persist — see tables.materialize); rows are

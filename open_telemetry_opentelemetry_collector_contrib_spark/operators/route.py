@@ -95,14 +95,6 @@ def with_route_match_all(
     return df.withColumn(out_col, F.explode(routed))
 
 
-def split_by_route(df: DataFrame, route_names: list[str], route_col: str = "route"):
-    """Per-sink DataFrames off one routed frame. Callers should persist the
-    routed frame (or write once with partitionBy) so the lineage is scanned
-    once, mirroring the reference's group-before-dispatch optimization
-    (`routingconnector/logs.go:119-124`)."""
-    return {name: df.filter(F.col(route_col) == name) for name in route_names}
-
-
 # ---------------------------------------------------------------------------
 # request context (`connector/routingconnector/request.go:32-77`)
 # ---------------------------------------------------------------------------

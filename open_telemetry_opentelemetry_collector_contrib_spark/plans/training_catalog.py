@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions import dedupe, multimodal, packing, similarity, text as text_fns
-from ..sources.tables import load_table, spread_scan
+from ..sources.tables import load_table, materialize, spread_scan
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -1081,18 +1081,15 @@ def q_curation_pipeline(spark, sf_dir):
     # exact dedup inline: keeper = min doc_id per md5(text) — same semantics
     # as exact_dedup's groupBy + semi-join but ONE window shuffle on the
     # digest, and the (regex-heavy) quality/lang scoring stays a single
-    # lineage into the one persisted frame below instead of running twice
+    # lineage into the one materialized frame below instead of running twice
     # (once into the dedup branch, once into the join input)
     from pyspark.sql import Window
 
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
-    kept = (
-        kept.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        # single pipeline-level persist scope: feeds LSH signatures, shingle
-        # freq, candidate sets and the final anti-join
-        .persist()
+    # materialized once: feeds LSH signatures, shingle freq, candidate sets
+    # and the final anti-join
+    kept = materialize(
+        kept.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
     # scale path: MinHash-LSH candidates -> exact Jaccard verify on the
     # candidates only (no full shingle self-join on the kept set); the

@@ -43,10 +43,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # persisted (cached) plans lose AQE partition coalescing by default;
-        # without this, every shuffle under a .persist() runs at the full
-        # static partition count — pure task-launch overhead at small inputs
-        # and a lost re-plan opportunity at scale
+        # cached plans lose AQE partition coalescing by default; the one
+        # remaining cache, sinks.write_sinks's repartition(conv_id), needs
+        # this so AQE coalesces that shuffle and each sink gets few files
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

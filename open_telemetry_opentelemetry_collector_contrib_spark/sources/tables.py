@@ -77,6 +77,10 @@ def materialize(df: DataFrame) -> DataFrame:
     local checkpoint is object-tied: every fresh ``queries()`` DataFrame
     recomputes it from the parquet inputs, and within one query plan all
     consumers share the one materialization (MEMORY_AND_DISK, spills).
+
+    This is the package's one way to share a subtree: no query path calls
+    ``persist``/``cache``; only ``sinks.write_sinks`` does, scoped to one
+    fan-out (``tests/test_source_rules.py`` enforces this).
     """
     return df.localCheckpoint(eager=False)
 

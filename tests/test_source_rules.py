@@ -11,6 +11,11 @@
   ``InheritableThread`` (imported, called or subclassed). Its
   ``write_sinks`` carries the caller's job group, tags and SQL local
   properties into its threads; a bare thread drops them.
+- A subtree is shared one way, ``sources.tables.materialize``: only
+  ``sinks.write_sinks`` calls ``persist``/``cache``/``unpersist``, for its
+  one scoped fan-out cache. A query-path ``persist`` registers its plan in
+  the session's CacheManager, so the next identical query in the session
+  reads the previous run's cache.
 
 The scan reads the syntax tree, so docstrings and comments that name the
 calls are fine.
@@ -28,9 +33,12 @@ PKG = REPO / "open_telemetry_opentelemetry_collector_contrib_spark"
 # perfbench/, which is the benchmark's own code)
 SOURCES = sorted([*PKG.rglob("*.py"), *REPO.glob("*.py"), *(REPO / "scripts").glob("*.py")])
 ROW_FRAME_CALLS = {"createDataFrame", "parallelize"}
+FLAGSHIP_CALLS = {"parse_transcripts", "role_dim", "tool_dim"}
 LOCAL_FRAME = (PKG / "sources" / "tables.py", "local_frame")
 FLAGSHIP = (PKG / "plans" / "pipeline.py", None)
 SINKS = (PKG / "sources" / "sinks.py", None)
+WRITE_SINKS = (PKG / "sources" / "sinks.py", "write_sinks")
+CACHE_CALLS = {"persist", "cache", "unpersist"}
 # flagged wherever they are named, not only where they are called
 THREADS = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
 # call name -> the only places it may be called: (file, enclosing top-level
@@ -38,10 +46,9 @@ THREADS = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
 ALLOWED = {
     "createDataFrame": {LOCAL_FRAME},
     "parallelize": {LOCAL_FRAME},
-    "parse_transcripts": {FLAGSHIP},
-    "role_dim": {FLAGSHIP},
-    "tool_dim": {FLAGSHIP},
+    **{name: {FLAGSHIP} for name in FLAGSHIP_CALLS},
     **{name: {SINKS} for name in THREADS},
+    **{name: {WRITE_SINKS} for name in CACHE_CALLS},
 }
 
 
@@ -153,6 +160,30 @@ def test_scanner_flags_threads_outside_sinks():
     assert banned_calls(src, PKG / "sources" / "sinks.py") == []
 
 
+def test_scanner_flags_caches_outside_write_sinks():
+    src = (
+        "def f(df):\n"
+        "    '''df.persist() in a docstring is fine'''\n"
+        "    shared = df.persist()\n"
+        "    shared.unpersist()\n"
+        "    return df.cache()\n"
+        "def write_sinks(routed):\n"
+        "    routed.persist()\n"
+    )
+    assert banned_calls(src, PKG / "functions" / "dedupe.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/functions/dedupe.py:3 persist()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/functions/dedupe.py:4 unpersist()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/functions/dedupe.py:5 cache()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/functions/dedupe.py:7 persist()",
+    ]
+    # in sinks.py only write_sinks may cache
+    assert banned_calls(src, PKG / "sources" / "sinks.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/sources/sinks.py:3 persist()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/sources/sinks.py:4 unpersist()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/sources/sinks.py:5 cache()",
+    ]
+
+
 def test_no_python_row_frames_outside_local_frame():
     assert len(SOURCES) > 50  # the package was found
     hits = offenders(ROW_FRAME_CALLS)
@@ -160,10 +191,15 @@ def test_no_python_row_frames_outside_local_frame():
 
 
 def test_flagship_stages_defined_once():
-    hits = offenders(ALLOWED.keys() - ROW_FRAME_CALLS - THREADS)
+    hits = offenders(FLAGSHIP_CALLS)
     assert hits == [], "compose the stages with pipeline.route_transcripts: " + ", ".join(hits)
 
 
 def test_spark_threads_only_in_sinks():
     hits = offenders(THREADS)
     assert hits == [], "run concurrent Spark writes through sinks.write_sinks: " + ", ".join(hits)
+
+
+def test_caches_only_in_write_sinks():
+    hits = offenders(CACHE_CALLS)
+    assert hits == [], "share a subtree with sources.tables.materialize: " + ", ".join(hits)
