@@ -8,7 +8,7 @@ section, minus the scaling legs) and dumps ``explain("formatted")`` for
 each, so before/after plan evidence can be committed under plans/r06/.
 
 Usage:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=4 \
       python bench_extra.py [--reps 3] [--explain plans/r06 --suffix before] \
       [query ...]
 
@@ -50,7 +50,7 @@ def main() -> None:
             i += 1
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
     from open_telemetry_opentelemetry_collector_contrib_spark.session import get_spark
 

@@ -9,8 +9,9 @@ lets every pipeline stage carry an exact DuckDB oracle in
 ``__spark_entry__.oracle_sql`` (value-hash correctness gate).
 
 Skew design (FIXTURES.md §1): ``conv_bucket`` folds 30% of rows into bucket 0,
-so each user has one hot conversation ~3x the size of the others — this is
-what the salting/AQE-skew paths get exercised against.
+so each user has one hot conversation ~3x the size of the others — the
+hot keys that partial aggregation, the runner's conv_id-partitioned fan-out
+and AQE get exercised against.
 
 Text shape mirrors the reference's stanza/regex-parser fixtures
 (`pkg/stanza/operator/parser/regex/parser.go:46-63` named capture groups):

@@ -527,41 +527,6 @@ def simhash(
     return df.select(F.col(id_col), sim.alias("simhash"))
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_bits: int = 16,
-) -> DataFrame:
-    """Candidate pairs sharing any 16-bit simhash chunk (Hamming<=3 recall
-    path), bucket-joined per chunk — same banding trick as MinHash LSH."""
-    sh = simhash(df, text_col, id_col)
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk"),
-                F.shiftright(F.col("simhash"), i * chunk_bits)
-                .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                .alias("value"),
-            )
-            for i in range(64 // chunk_bits)
-        ]
-    )
-    banded = sh.select(id_col, "simhash", F.explode(chunks).alias("c")).select(
-        id_col, "simhash", F.col("c.chunk").alias("chunk"), F.col("c.value").alias("value")
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "chunk", "value")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), "chunk", "value")
-    pairs = (
-        a.join(b, ["chunk", "value"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sim_a", "sim_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return pairs.withColumn("hamming", hamming.cast("int")).drop("sim_a", "sim_b")
-
-
 def jaccard_verified_pairs_lsh(
     df: DataFrame,
     text_col: str = "text",

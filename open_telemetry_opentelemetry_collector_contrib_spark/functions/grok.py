@@ -170,11 +170,6 @@ def grok_to_regex(
     return grok_expand(pattern, named_captures_only, pattern_definitions)[0]
 
 
-def grok_group_names(pattern: str, **kw) -> list[str]:
-    regex = grok_to_regex(pattern, **kw)
-    return re.findall(r"\(\?P<([A-Za-z0-9]+)>", regex)
-
-
 def grok_parse_pandas(df, pattern: str, text_col: str = "text", prefix: str = "", **kw):
     """Single-pass grok extraction as an Arrow-batched pandas UDF.
 

@@ -21,7 +21,7 @@ with bounded key cardinality this is the only aggregation shape that works.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 
@@ -35,16 +35,16 @@ def tumbling_window_id(ts: Column, window_s: int) -> Column:
     return F.floor(F.unix_timestamp(ts) / window_s).cast("bigint")
 
 
-def windowed_count(
+def _keyed_windows(
     df: DataFrame,
     keys: list[str],
-    window_s: int = 3600,
-    ts_col: str = "ts",
-    condition: Column | None = None,
-    defaults: dict[str, str] | None = None,
-    count_col: str = "n",
-) -> DataFrame:
-    """countconnector: conditions -> required-key skip/default -> keyed count."""
+    window_s: int,
+    ts_col: str,
+    condition: Column | None,
+    defaults: dict[str, str] | None,
+) -> GroupedData:
+    """The count/sum connectors' shared body: conditions -> required-key
+    skip/default -> rows grouped by (window_id, *keys)."""
     if condition is not None:
         df = df.filter(condition)
     defaults = defaults or {}
@@ -57,10 +57,23 @@ def windowed_count(
             # required attribute missing and no default => skip row
             df = df.filter(F.col(k).isNotNull())
         key_cols.append(c.alias(k))
-    return (
-        df.withColumn("window_id", tumbling_window_id(F.col(ts_col), window_s))
-        .groupBy(F.col("window_id"), *key_cols)
-        .agg(F.count(F.lit(1)).alias(count_col))
+    return df.withColumn(
+        "window_id", tumbling_window_id(F.col(ts_col), window_s)
+    ).groupBy(F.col("window_id"), *key_cols)
+
+
+def windowed_count(
+    df: DataFrame,
+    keys: list[str],
+    window_s: int = 3600,
+    ts_col: str = "ts",
+    condition: Column | None = None,
+    defaults: dict[str, str] | None = None,
+    count_col: str = "n",
+) -> DataFrame:
+    """countconnector: conditions -> required-key skip/default -> keyed count."""
+    return _keyed_windows(df, keys, window_s, ts_col, condition, defaults).agg(
+        F.count(F.lit(1)).alias(count_col)
     )
 
 
@@ -75,19 +88,6 @@ def windowed_sum(
     sum_col: str = "total",
 ) -> DataFrame:
     """sumconnector (`connector/sumconnector/config.go:18-37`)."""
-    if condition is not None:
-        df = df.filter(condition)
-    defaults = defaults or {}
-    key_cols = []
-    for k in keys:
-        c = F.col(k)
-        if k in defaults:
-            c = F.coalesce(c, F.lit(defaults[k]))
-        else:
-            df = df.filter(F.col(k).isNotNull())
-        key_cols.append(c.alias(k))
-    return (
-        df.withColumn("window_id", tumbling_window_id(F.col(ts_col), window_s))
-        .groupBy(F.col("window_id"), *key_cols)
-        .agg(F.sum(source_col).alias(sum_col))
+    return _keyed_windows(df, keys, window_s, ts_col, condition, defaults).agg(
+        F.sum(source_col).alias(sum_col)
     )

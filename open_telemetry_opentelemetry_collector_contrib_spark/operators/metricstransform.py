@@ -26,13 +26,6 @@ _AGGS = {
 }
 
 
-def rename_labels(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """update_label operation: rename dimension columns."""
-    for old, new in mapping.items():
-        df = df.withColumnRenamed(old, new)
-    return df
-
-
 def aggregate_labels(
     df: DataFrame,
     keep_labels: list[str],

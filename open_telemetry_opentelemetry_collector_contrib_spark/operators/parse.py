@@ -264,25 +264,6 @@ def parse_uri(df: DataFrame, uri_col: str, prefix: str = "uri_") -> DataFrame:
     )
 
 
-def parse_fields(
-    df: DataFrame,
-    field_patterns: dict[str, tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
-    """Generic regex parser: ``{out_col: (pattern, cast_type)}``.
-
-    Mirrors the stanza regex parser's parse_from/parse_to contract with
-    arbitrary user patterns; one Catalyst projection, no UDFs.
-    """
-    text = F.col(text_col)
-    for out, (pattern, cast_type) in field_patterns.items():
-        c = _nullable_extract(text, pattern)
-        if cast_type and cast_type != "string":
-            c = c.cast(cast_type)
-        df = df.withColumn(out, c)
-    return df
-
-
 # RFC5424: "<165>1 2003-10-11T22:14:15.003Z host app 1234 ID47 [sd@id k="v"] msg"
 # (`pkg/stanza/operator/parser/syslog/config.go:23`; RFC 5424 ABNF)
 SYSLOG_RFC5424_RE = (

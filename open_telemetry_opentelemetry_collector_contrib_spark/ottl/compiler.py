@@ -370,15 +370,6 @@ def compile_conditions_or(sources: list[str], ctx: LogContext) -> Column:
     return out
 
 
-def compile_conditions_and(sources: list[str], ctx: LogContext) -> Column:
-    """AND-composed ConditionSequence (`pkg/ottl/parser.go:410-441`,
-    LogicOperation=and)."""
-    out = compile_condition(sources[0], ctx)
-    for s in sources[1:]:
-        out = out & compile_condition(s, ctx)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Statement application (editors mutate the frame)
 # ---------------------------------------------------------------------------

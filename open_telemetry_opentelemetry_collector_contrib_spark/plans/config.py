@@ -33,6 +33,7 @@ Example spec::
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -242,8 +243,6 @@ def _st_regex(spark, df, op):
     """Named-capture regex parse: each Go `(?P<name>…)` group becomes a
     column (`pkg/stanza/operator/parser/regex/parser.go:46-63`); rows the
     pattern misses get NULL fields (on_error=send)."""
-    import re
-
     from pyspark.sql import functions as F
 
     pattern = op["regex"]
@@ -281,7 +280,7 @@ def _st_csv(spark, df, op):
 
     src = _field(op.get("parse_from", "text"))
     delim = op.get("delimiter", ",")
-    df = df.withColumn("__csv", F.split(F.col(src), re_escape(delim)))
+    df = df.withColumn("__csv", F.split(F.col(src), re.escape(delim)))
     df = stanza_ops.assign_keys(df, "__csv", op["header"])
     return _embedded_parsers(df.drop("__csv"), op)
 
@@ -296,8 +295,8 @@ def _st_kv(spark, df, op):
         op.get("parse_to", "attributes"),
         F.str_to_map(
             src,
-            F.lit(re_escape(op.get("pair_delimiter", " "))),
-            F.lit(re_escape(op.get("delimiter", "="))),
+            F.lit(re.escape(op.get("pair_delimiter", " "))),
+            F.lit(re.escape(op.get("delimiter", "="))),
         ),
     )
     return _embedded_parsers(df, op)
@@ -368,12 +367,6 @@ def _st_retain(spark, df, op):
     return stanza_ops.retain(df, [_field(f) for f in op["fields"]])
 
 
-def re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
-
-
 @stage("logstransform")
 def _logstransform(spark, df, cfg):
     for op in cfg.get("operators", []):
@@ -401,15 +394,13 @@ def validate(spec: dict) -> None:
             for s in p.get("statements", []):
                 parse_statement(s)
             if p["type"] == "logstransform":
-                import re as _re
-
                 for op in p.get("operators", []):
                     if op.get("type") not in _STANZA_OPS:
                         raise ConfigError(
                             f"unknown stanza operator {op.get('type')!r}"
                         )
                     if "regex" in op:
-                        _re.compile(op["regex"])
+                        re.compile(op["regex"])
                     sev = op.get("severity") or (
                         op if op["type"] == "severity_parser" else None
                     )
@@ -470,21 +461,14 @@ def build(spark: SparkSession, spec: dict, source: DataFrame) -> DataFrame:
 
     agg = spec.get("aggregate")
     if agg:
+        keyed = dict(
+            keys=agg["keys"],
+            window_s=agg.get("window_s", 3600),
+            ts_col=agg.get("ts_col", "ts"),
+            defaults=agg.get("defaults"),
+        )
         if agg.get("type", "count") == "count":
-            df = windowed_count(
-                df,
-                keys=agg["keys"],
-                window_s=agg.get("window_s", 3600),
-                ts_col=agg.get("ts_col", "ts"),
-                defaults=agg.get("defaults"),
-            )
+            df = windowed_count(df, **keyed)
         else:
-            df = windowed_sum(
-                df,
-                keys=agg["keys"],
-                source_col=agg["source"],
-                window_s=agg.get("window_s", 3600),
-                ts_col=agg.get("ts_col", "ts"),
-                defaults=agg.get("defaults"),
-            )
+            df = windowed_sum(df, source_col=agg["source"], **keyed)
     return df

@@ -20,8 +20,13 @@ North-rule requirements implemented here:
   so a crash mid-chunk re-runs exactly that chunk on resume (the same
   contract as fileconsumer offset checkpoints,
   `pkg/stanza/fileconsumer/internal/checkpoint/checkpoint.go:20-49`);
-- **skew handling**: explicit repartition on (salted) conv_id before the
-  shuffle-heavy aggregate; AQE skew-join is enabled in session.py.
+- **skew handling**: ``write_sinks`` hash-partitions the routed rows by
+  conv_id once, so each conversation's rows, hot ones included, sit in one
+  partition; the counts (``pipeline.count_routes``, keyed by conv_id) then
+  aggregate that cached frame with no further shuffle, and Catalyst's
+  partial aggregation collapses a hot conversation's rows to one per
+  (window, route, role, tool) within its task. AQE (partition coalescing,
+  skew-join splitting) is on in session.py.
 
 At 100 TB the chunk unit would be an Iceberg snapshot/manifest range instead
 of a file list; the commit protocol (data first, lineage second, idempotent
@@ -41,8 +46,6 @@ from pyspark.sql import functions as F
 from ..datagen import transcripts
 from ..sources import sinks as sinks_io
 from . import pipeline as flagship
-
-SALT_BUCKETS = 8
 
 
 def _list_parquet_files(path: str) -> list[str]:
@@ -155,10 +158,9 @@ class PipelineRunner:
             flagship.SINKS,
             lambda df, s: write(df, f"route_{s}", os.path.join("sinks", f"route={s}")),
             # aggregate stage off the cached ordered frame, written alongside
-            # the sinks: salted two-phase count to absorb hot conv_ids, per
-            # chunk (delta temporality, like the count connector's per-batch
-            # emission)
-            lambda ordered: write(self._salted_counts(ordered), "counts", "counts"),
+            # the sinks: the flagship count per chunk (delta temporality, like
+            # the count connector's per-batch emission)
+            lambda ordered: write(flagship.count_routes(ordered), "counts", "counts"),
         )
         metrics = {k: int(v) for k, v in obs.get.items()}
 
@@ -170,27 +172,6 @@ class PipelineRunner:
         )
         self._commit_lineage(res)
         return res
-
-    def _salted_counts(self, routed: DataFrame) -> DataFrame:
-        """Two-phase aggregation: pre-aggregate on (salt, keys), then merge.
-
-        Hot conv_ids (the skew FIXTURES.md bakes in) would otherwise send all
-        their rows to one reducer; the salt spreads phase 1 across
-        ``SALT_BUCKETS`` reducers and phase 2 merges tiny partials.
-        """
-        keyed = routed.withColumn(
-            "window_id",
-            F.floor(F.unix_timestamp("ts") / flagship.WINDOW_S).cast("bigint"),
-        ).withColumn(
-            "__salt", F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
-        )
-        partial = keyed.groupBy(
-            "__salt", "window_id", "route", "conv_id", "role", "tool"
-        ).agg(F.count(F.lit(1)).alias("n_partial"))
-        return (
-            partial.groupBy("window_id", "route", "conv_id", "role", "tool")
-            .agg(F.sum("n_partial").alias("n"))
-        )
 
     # -- full run ------------------------------------------------------------
 

@@ -29,10 +29,11 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores`` pins ``local[cores]`` — used by the dual-parallelism scaling
-    benchmark (local[8] vs local[32] as the N vs 4N executor stand-in).
+    benchmark (local[N] vs local[4N] as the executor stand-in). It defaults
+    to ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 32)
 

@@ -19,6 +19,8 @@ same per-file sequential constraint: one reader goroutine per file).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -85,7 +87,7 @@ def read_text_logs_encoded(
     )
     lines = decoded.select(
         "file",
-        F.posexplode(F.split(F.col("__text"), re_escape(line_sep))).alias(
+        F.posexplode(F.split(F.col("__text"), re.escape(line_sep))).alias(
             "__idx", "line"
         ),
     )
@@ -97,12 +99,6 @@ def read_text_logs_encoded(
     return lines.select(
         "file", (F.col("__idx") + 1).alias("line_no"), "line"
     )
-
-
-def re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
 
 
 def read_logs_with_header(

@@ -70,34 +70,21 @@ def write_table(
         fmt == "auto" and "/" not in target and iceberg_available(spark)
     )
     if use_iceberg:
-        if mode == "overwrite_partitions":
-            # choose create vs dynamic-overwrite by asking the catalog, not
-            # by sniffing exception text — unrelated failures on the
-            # crash-recovery path (FileNotFoundException, missing metadata
-            # file) must surface, not be masked by a create() retry.
-            if spark.catalog.tableExists(target):
-                writer = df.writeTo(target)
-                if compression:
-                    writer = writer.tableProperty(
-                        "write.parquet.compression-codec", compression
-                    )
-                writer.overwritePartitions()
-            else:
-                writer = df.writeTo(target)
-                if compression:
-                    writer = writer.tableProperty(
-                        "write.parquet.compression-codec", compression
-                    )
-                if group_by:
-                    writer = writer.partitionedBy(*[F.col(c) for c in group_by])
-                writer.create()
-            return
         writer = df.writeTo(target)
         if compression:
             writer = writer.tableProperty("write.parquet.compression-codec", compression)
+        # choose create vs dynamic-overwrite by asking the catalog, not by
+        # sniffing exception text — unrelated failures on the crash-recovery
+        # path (FileNotFoundException, missing metadata file) must surface,
+        # not be masked by a create() retry.
+        if mode == "overwrite_partitions" and spark.catalog.tableExists(target):
+            writer.overwritePartitions()
+            return
         if group_by:
             writer = writer.partitionedBy(*[F.col(c) for c in group_by])
-        if mode == "overwrite":
+        if mode == "overwrite_partitions":
+            writer.create()
+        elif mode == "overwrite":
             writer.createOrReplace()
         else:
             writer.append()
@@ -105,13 +92,8 @@ def write_table(
     if mode == "overwrite_partitions":
         # parquet analog: dynamic partition overwrite on the group_by cols
         w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        if compression:
-            w = w.option("compression", compression)
-        if group_by:
-            w = w.partitionBy(*group_by)
-        w.parquet(target)
-        return
-    w = df.write.mode(mode)
+    else:
+        w = df.write.mode(mode)
     if compression:
         w = w.option("compression", compression)
     if group_by:

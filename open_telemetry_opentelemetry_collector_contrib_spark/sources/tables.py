@@ -73,10 +73,17 @@ def materialize(df: DataFrame) -> DataFrame:
     / §5). ``localCheckpoint`` (not ``persist``) on purpose: persist
     registers the plan in the session CacheManager, so a *fresh* identical
     query in the same session would silently reuse the previous run's
-    cached data — cross-run result caching the bench must never do. A lazy
+    cached data — cross-run result caching the bench must never do. A
     local checkpoint is object-tied: every fresh ``queries()`` DataFrame
     recomputes it from the parquet inputs, and within one query plan all
     consumers share the one materialization (MEMORY_AND_DISK, spills).
+
+    ``eager=False`` defers only the checkpoint's final stage. Under AQE,
+    ``Dataset.checkpoint`` executes the adaptive plan, which runs every
+    shuffle-map stage below the checkpoint right away, so building a query
+    (even for an ``explain()``) already runs Spark jobs: at sf0.01 on
+    ``local[2]``, 10 for ``curation_pipeline`` and 2 for
+    ``minhash_lsh_pairs``.
 
     This is the package's one way to share a subtree: no query path calls
     ``persist``/``cache``; only ``sinks.write_sinks`` does, scoped to one

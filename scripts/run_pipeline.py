@@ -3,11 +3,11 @@
 Usage (local example; on a cluster swap --master and add executors):
 
     python -m zipfile -c /tmp/otelcol_spark.zip open_telemetry_opentelemetry_collector_contrib_spark
-    spark-submit --master local[32] \
+    spark-submit --master local[4] \
         --py-files /tmp/otelcol_spark.zip \
         scripts/run_pipeline.py \
         --sf-dir /root/testdata/sf0.1 --out /tmp/pipeline_out \
-        --chunks 8 [--resume] [--cores 32]
+        --chunks 8 [--resume] [--cores N]
 
 Prints one JSON line per chunk (lineage record) and a final summary line.
 """
@@ -28,7 +28,7 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--transcripts", help="pre-materialized transcripts parquet dir")
     ap.add_argument("--chunks", type=int, default=8)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))))
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--fresh", action="store_true", help="clear lineage before running")
     ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"],

@@ -24,7 +24,7 @@ Usage (run alone on the host — shares the bench gotcha about co-tenant
 Spark JVMs):
 
     python scripts/scale_gate.py [--turns-rep 4000] [--docs-rep 100]
-        [--cores 32] [--skip-turns] [--skip-docs]
+        [--cores N] [--skip-turns] [--skip-docs]
 
 Writes /tmp/otelcol_scale_gate/summary.json and prints it; the BASELINE.md
 "10x scale gate" section is transcribed from that output.
@@ -199,7 +199,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--turns-rep", type=int, default=4000)
     ap.add_argument("--docs-rep", type=int, default=100)
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--skip-turns", action="store_true")
     ap.add_argument("--skip-docs", action="store_true")
     args = ap.parse_args()

@@ -42,7 +42,7 @@ def test_round_robin_spreads_evenly(spark):
 
 def test_datagen_has_hot_conv_skew(spark):
     """FIXTURES.md mandates hot keys (~30% of rows in the hot bucket) so the
-    salting/AQE paths are actually exercised."""
+    skew-handling paths (partial aggregation, AQE) are actually exercised."""
     t = transcripts(spark, SF_UNIT)
     total = t.count()
     by_conv = t.groupBy("conv_id").count()

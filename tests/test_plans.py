@@ -30,6 +30,29 @@ def test_flagship_counts_plan_shape(spark):
     assert tree.count("HashAggregate") == 2
 
 
+def test_counts_over_the_fan_out_cache_do_not_shuffle(spark):
+    """The runner's counts aggregate the cache ``write_sinks`` builds,
+    already hash-partitioned by conv_id (a grouping key): partial and final
+    aggregate, and no Exchange above the cache scan."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import transcripts
+    from open_telemetry_opentelemetry_collector_contrib_spark.sources import sinks
+
+    trees = []
+    sinks.write_sinks(
+        pipeline.route_transcripts(transcripts(spark, SF_UNIT)),
+        [],
+        lambda rows, sink: None,
+        lambda ordered: trees.append(
+            explain(pipeline.count_routes(ordered)).split("\n\n")[0]
+        ),
+    )
+    (tree,) = trees
+    above_cache = tree.split("InMemoryTableScan")[0]
+    assert "InMemoryTableScan" in tree
+    assert tree.count("HashAggregate") == 2
+    assert "Exchange" not in above_cache
+
+
 def test_enrich_dims_plan_as_local_relations(spark):
     """Both enrich dimensions are rows in the plan (LocalTableScan), never a
     pickled Python RDD (Scan ExistingRDD), and both joins still broadcast —

@@ -164,6 +164,38 @@ def test_aggregate_count_parity(run_out, spark):
     assert got == exp
 
 
+def test_chunk_counts_skip_rows_missing_a_key(spark, tmp_path):
+    """The runner's counts are the flagship aggregate: a row with a null
+    ``tool`` is skipped (countconnector's required-key rule,
+    `counter.go:70-73`), not counted under a null key."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.datagen import transcripts
+
+    t = transcripts(spark, SF_UNIT)
+    first = t.agg(F.min("conv_id")).first()[0]
+    src = str(tmp_path / "src")
+    t.withColumn(
+        "tool",
+        F.when(
+            (F.col("conv_id") == first) & (F.col("turn_idx") == 0),
+            F.lit(None).cast("string"),
+        ).otherwise(F.col("tool")),
+    ).coalesce(1).write.parquet(src)
+    source = spark.read.parquet(src)
+    assert source.filter(F.col("tool").isNull()).count() == 1
+    runner = PipelineRunner(spark, src, str(tmp_path / "out"), num_chunks=1)
+    runner.run(resume=False)
+
+    def counts(df):
+        return {
+            (r.window_id, r.route, r.conv_id, r.role, r.tool): r.n
+            for r in df.collect()
+        }
+
+    got = counts(runner.read_counts())
+    assert got == counts(pipeline.count_routes(pipeline.route_transcripts(source)))
+    assert all(k[4] is not None for k in got)
+
+
 def test_resume_skips_completed_and_reruns_failed(run_out, spark):
     runner, _ = run_out
     # simulate a crash after chunk 2's data write but before its lineage
