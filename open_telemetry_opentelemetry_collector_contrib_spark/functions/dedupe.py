@@ -236,64 +236,16 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 64,
     seed: int = 42,
-    impl: str = "pandas",
     base_hash: str = "crc32",
 ) -> DataFrame:
-    """Per-doc MinHash signature (array<bigint>, length num_hashes).
-
-    impl='pandas' (default): Arrow-batched pandas UDF with numpy-vectorized
-    universal hashing (~50x the throughput of the Catalyst fold — interpreted
-    higher-order functions are CodegenFallback, so per-shingle x per-hash
-    work is the rare case where the vectorized-Python path wins).
-    impl='sql': pure Column program (one aggregate fold), zero Python.
-    Both: signature is num_hashes*8 bytes/doc regardless of doc size — the
-    whole point at 100 TB. Base hash differs between impls (crc32 vs
-    xxhash64), so signatures are impl-stable but not cross-impl-equal.
-    """
-    if impl == "pandas":
-        return _minhash_signatures_pandas(
-            df, text_col, id_col, n, num_hashes, seed, base_hash
-        )
-    params = _hash_params(num_hashes, seed)
-    base_fn = (
-        (lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
-        if base_hash == "crc32"
-        else (lambda s: F.pmod(md5_48(s), F.lit(_MERSENNE31)))
-    )
-    base = F.transform(word_shingles(F.col(text_col), n), base_fn)
-    # ONE fold over the shingle hashes carrying all num_hashes running
-    # minima: higher-order functions are CodegenFallback (no subexpression
-    # elimination), so per-hash array_min(transform(base, ...)) would
-    # recompute the shingling num_hashes times — catastrophic on long docs.
-    params_arr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in params
-        ]
-    )
-    init = F.array_repeat(F.lit(_MERSENNE31).cast("long"), num_hashes)
-    sig = F.aggregate(
-        base,
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            params_arr,
-            lambda m, p: F.least(
-                m, F.pmod(x * p["a"] + p["b"], F.lit(_MERSENNE31))
-            ),
-        ),
-    )
-    return df.select(F.col(id_col), sig.alias("signature"))
-
-
-def _minhash_signatures_pandas(
-    df: DataFrame, text_col: str, id_col: str, n: int, num_hashes: int, seed: int,
-    base_hash: str = "crc32",
-) -> DataFrame:
-    """numpy minhash inside an Arrow-batched pandas UDF (deterministic:
+    """Per-doc MinHash signature (array<bigint>, length num_hashes): numpy
+    universal hashing inside an Arrow-batched pandas UDF (deterministic:
     crc32 or md5-48 shingle hashing, seeded universal-hash params).
-    base_hash='md5_48' is the oracle-portable variant (same int DuckDB
-    computes from md5 hex)."""
+    Interpreted higher-order functions are CodegenFallback, so per-shingle
+    x per-hash work is the rare case where the vectorized-Python path beats
+    a Catalyst fold (~50x). The signature is num_hashes*8 bytes/doc
+    regardless of doc size. base_hash='md5_48' is the oracle-portable
+    variant (same int DuckDB computes from md5 hex)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -391,8 +343,8 @@ def _band_and_cap(
     """Explode a signature frame into (id, band, bucket) with the
     hot-bucket cap as ONE window count on the bucket shuffle (vs the old
     groupBy + join-back: an extra aggregate exchange + broadcast per
-    call); materializes the filtered frame so the (expensive, interpreted)
-    signature fold runs once and both join sides read it."""
+    call); materializes the filtered frame so the (expensive, Python)
+    signature UDF runs once and both join sides read it."""
 
     def band_key(b):
         joined = F.array_join(

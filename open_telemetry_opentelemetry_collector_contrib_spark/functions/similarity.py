@@ -39,7 +39,7 @@ def _nearest_centroid_udf(centroids: list[list[float]]):
 
     # no type hints: `from __future__ import annotations` stringifies them,
     # which pyspark's eval-type inference can't resolve — explicit SCALAR
-    # form (same convention as dedupe._minhash_signatures_pandas).
+    # form (same convention as dedupe.minhash_signatures' _sig_fn).
     # A null vector, a vector of the wrong length, or one with a null
     # element (Arrow hands it over as NaN) has no distance to any centroid:
     # its cluster is null, so it joins no cluster downstream. This is the one

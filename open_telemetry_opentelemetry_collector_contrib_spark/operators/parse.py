@@ -190,11 +190,13 @@ def parse_container_cri(
     df: DataFrame, text_col: str = "text", path_col: str | None = None
 ) -> DataFrame:
     """stanza container parser, crio/containerd formats: CRI line =
-    `<time> <stream> <P|F logtag> <log>`; partial (P) lines recombine with
-    the following lines of the same (source, stream) until an F tag —
-    the parser's internal recombine (`parser.go:28,61`) expressed as the
-    standard sessionization window. Optional k8s log-path attribute
-    extraction (namespace/pod/uid/container/restart_count)."""
+    `<time> <stream> <P|F logtag> <log>`, one row per line. Partial (P)
+    lines are not joined here: as the reference's parser reuses its
+    recombine operator (`parser.go:28,61`), join them with
+    ``recombine.recombine(parsed, [source, "container_stream"], order,
+    "container_log", is_last_entry=F.col("container_logtag") == "F",
+    combine_with="", out_col="container_log")``. Optional k8s log-path
+    attribute extraction (namespace/pod/uid/container/restart_count)."""
     text = F.col(text_col)
     out = (
         df.withColumn(
@@ -214,43 +216,6 @@ def parse_container_cri(
             .withColumn("k8s_restart_count", F.nullif(F.regexp_extract(pathc, K8S_LOGPATH_RE, 5), F.lit("")).try_cast("int"))
         )
     return out
-
-
-def recombine_cri_partials(
-    df: DataFrame,
-    source_cols: list[str],
-    order_col: str,
-    log_col: str = "container_log",
-    tag_col: str = "container_logtag",
-) -> DataFrame:
-    """CRI partial-line recombine: a group is a run of P-tagged lines closed
-    by an F line; emit one row per group with logs concatenated in order
-    (recombine with is_last_entry = logtag == 'F', parser.go:61 +
-    transformer/recombine). Sessionization: group id = running count of F
-    tags BEFORE the current row within (source)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*source_cols).orderBy(order_col)
-    prev_f = F.lag(F.when(F.col(tag_col) == "F", 1).otherwise(0), 1, 0).over(w)
-    grp = F.sum(prev_f).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    grouped = df.withColumn("__grp", grp)
-    return (
-        grouped.groupBy(*source_cols, "__grp")
-        .agg(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col(order_col).alias("o"), F.col(log_col).alias("l")))
-                    ),
-                    lambda x: x["l"],
-                ),
-            ).alias(log_col),
-            F.min(order_col).alias(order_col),
-            F.max(F.when(F.col(tag_col) == "F", 1).otherwise(0)).alias("__complete"),
-        )
-        .drop("__grp")
-    )
 
 
 def parse_uri(df: DataFrame, uri_col: str, prefix: str = "uri_") -> DataFrame:

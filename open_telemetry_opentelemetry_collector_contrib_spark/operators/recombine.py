@@ -2,7 +2,8 @@
 
 Reference semantics (`pkg/stanza/operator/transformer/recombine/config.go:49-62`):
 - a group starts where ``is_first_entry`` matches (or ends where
-  ``is_last_entry`` matches), scoped per ``source_identifier``;
+  ``is_last_entry`` matches), scoped per ``source_identifier`` (one or more
+  columns here: the container parser scopes by file AND stream);
 - member payloads are joined with ``combine_with`` (default "\\n");
 - max_batch_size / force_flush_period are memory-pressure valves, not
   semantics — irrelevant in batch.
@@ -65,7 +66,7 @@ def session_split(
 
 def recombine(
     df: DataFrame,
-    source_col: str,
+    source_cols: list[str],
     order_col: str,
     text_col: str,
     is_first_entry: Column | None = None,
@@ -73,11 +74,11 @@ def recombine(
     combine_with: str = "\n",
     out_col: str = "combined",
 ) -> DataFrame:
-    """Returns one row per group: source, group_id, first order value,
+    """Returns one row per group: source columns, first order value,
     combined text, member count."""
     if (is_first_entry is None) == (is_last_entry is None):
         raise ValueError("exactly one of is_first_entry / is_last_entry required")
-    w = Window.partitionBy(source_col).orderBy(order_col)
+    w = Window.partitionBy(*source_cols).orderBy(order_col)
     if is_first_entry is not None:
         flag = F.coalesce(is_first_entry, F.lit(False)).cast("int")
         group = F.sum(flag).over(w)  # rows before the first boundary share group 0
@@ -89,7 +90,7 @@ def recombine(
     grouped = df.withColumn("__grp", group)
     member = F.struct(F.col(order_col).alias("o"), F.col(text_col).alias("t"))
     return (
-        grouped.groupBy(source_col, "__grp")
+        grouped.groupBy(*source_cols, "__grp")
         .agg(
             F.min(order_col).alias(order_col),
             F.concat_ws(

@@ -9,6 +9,8 @@ these operators need.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,36 +56,6 @@ def group_by_trace(spans: DataFrame, max_spans: int | None = None) -> DataFrame:
     return agg
 
 
-def tail_sample(
-    spans: DataFrame,
-    latency_threshold_ms: int | None = None,
-    error_status: str = "err",
-    sample_percent: float = 10.0,
-    seed: int = 22,
-) -> DataFrame:
-    """tailsamplingprocessor (`processor/tailsamplingprocessor/config.go:241-256`)
-    with the canonical OR-composite policy set:
-    - latency policy: keep the whole trace when any span exceeds the
-      threshold;
-    - status policy: keep traces containing an error span;
-    - probabilistic policy: keep a deterministic hash percentage of the rest.
-    Decision per trace (one aggregation), then a semi-join keeps every span
-    of sampled traces — same shape as the reference's decision-then-release.
-    """
-    decisions = spans.groupBy("trace_id").agg(
-        F.max(F.col("duration_ms")).alias("__max_lat"),
-        F.max((F.col("status") == error_status).cast("int")).alias("__has_err"),
-    )
-    keep = F.col("__has_err") == 1
-    if latency_threshold_ms is not None:
-        # sampling/latency.go:53-54: duration >= threshold (no upper bound)
-        keep = keep | (F.col("__max_lat") >= latency_threshold_ms)
-    bucket = F.pmod(F.xxhash64(F.col("trace_id"), F.lit(seed)), F.lit(10000))
-    keep = keep | (bucket < int(sample_percent * 100))
-    sampled = decisions.filter(keep).select("trace_id")
-    return spans.join(sampled, "trace_id", "left_semi")
-
-
 def service_graph(spans: DataFrame) -> DataFrame:
     """servicegraphconnector (`connector/servicegraphconnector/connector.go:61-113`):
     client->server edges from parent/child span matching, with request/error
@@ -127,11 +99,8 @@ def exceptions_connector(
 
 
 # ---------------------------------------------------------------------------
-# tail sampling: full policy set
+# tail sampling
 # ---------------------------------------------------------------------------
-
-
-from dataclasses import dataclass, field
 
 
 @dataclass
@@ -275,13 +244,11 @@ def _collect_span_scoped(policies: list[TailPolicy], prefix="") -> list[tuple[st
     return out
 
 
-def tail_sample_policies(
-    spans: DataFrame, policies: list[TailPolicy], strategy: str = "auto"
-) -> DataFrame:
-    """tailsamplingprocessor with the full policy table: one aggregation
+def tail_sample_policies(spans: DataFrame, policies: list[TailPolicy]) -> DataFrame:
+    """tailsamplingprocessor with the full policy table: one pass
     computes every per-trace stat, policy decisions are OR-composed
-    (a trace survives if ANY policy samples it), then a semi-join releases
-    all spans of sampled traces — decision-then-release, the reference's
+    (a trace survives if ANY policy samples it), then all spans of sampled
+    traces are released — decision-then-release, the reference's
     shape (processor.go samplingPolicyOnTick) without the in-memory trace
     buffer (the shuffle by trace_id IS the buffer in batch).
 
@@ -290,19 +257,15 @@ def tail_sample_policies(
     (cumulative window sum per second bucket), matching the reference's
     steady-state admission behavior deterministically.
 
-    strategy: 'join' = stats groupBy + semi-join release (two scans of the
-    span input); 'window' = per-trace stats via Window.partitionBy(trace_id)
-    and an inline filter — ONE scan, one shuffle, strictly better at scale
-    but unavailable for rate policies (their admission windows order whole
-    TRACES, not spans). 'auto' picks window when no rate policy is present.
+    Without a rate policy the per-trace stats come from
+    Window.partitionBy(trace_id) and an inline filter: ONE scan and one
+    shuffle. Rate policies order whole TRACES, not spans, so with one
+    present the stats are a groupBy and a semi-join releases the spans
+    (two scans of the span input).
     """
     has_rate = any(p.type in ("rate_limiting", "composite") for p in policies)
-    if strategy == "auto":
-        strategy = "join" if has_rate else "window"
-    if strategy == "window" and has_rate:
-        raise ValueError("window strategy cannot express rate policies")
     span_scoped = _collect_span_scoped(policies)
-    if strategy == "window":
+    if not has_rate:
         w = Window.partitionBy("trace_id")
         df = (
             spans.withColumn("__span_count", F.count(F.lit(1)).over(w))

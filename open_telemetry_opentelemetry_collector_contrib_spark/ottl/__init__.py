@@ -11,7 +11,7 @@ Public surface:
     LogContext(df)                                    -> path resolution
     compile_condition(src, ctx)                       -> Column (boolean)
     apply_statement(df, src)                          -> DataFrame
-    apply_statements(df, [src, ...], error_mode=...)  -> DataFrame (in-order fold)
+    apply_statements(df, [src, ...])                  -> DataFrame (in-order fold)
 """
 
 from .compiler import (  # noqa: F401

@@ -12,9 +12,9 @@ Semantics reproduced from the reference:
   reference) — Spark would silently coerce, which would diverge.
 - Statements execute in order, later statements observing earlier mutations
   (`pkg/ottl/parser.go:341-356`) -> a fold of DataFrame transformations.
-- error_mode ignore/silent/propagate (`pkg/ottl/parser.go:337-356`): with
-  vectorized expressions, per-row errors become NULLs (Spark's try_* family);
-  propagate mode uses strict casts so a bad row fails the job.
+- error_mode (`pkg/ottl/parser.go:337-356`): with vectorized expressions,
+  per-row errors become NULLs (Spark's try_* family), the ignore/silent
+  semantics; propagate is not offered.
 """
 
 from __future__ import annotations
@@ -387,12 +387,11 @@ def apply_statement(df: DataFrame, src: str, ctx_cls: type = LogContext) -> Data
 def apply_statements(
     df: DataFrame,
     sources: list[str],
-    error_mode: str = "ignore",
     ctx_cls: type = LogContext,
 ) -> DataFrame:
     """In-order fold; later statements see earlier mutations
-    (`pkg/ottl/parser.go:341-356`). error_mode is accepted for config parity;
-    vectorized per-row failures surface as NULLs (ignore/silent semantics).
+    (`pkg/ottl/parser.go:341-356`). Vectorized per-row failures surface as
+    NULLs, the reference's error_mode ignore/silent semantics.
     ctx_cls selects the transform context (LogContext | SpanContext)."""
     for s in sources:
         df = apply_statement(df, s, ctx_cls=ctx_cls)

@@ -869,7 +869,7 @@ FROM spans GROUP BY 1, 2, 3
 def q_recombine_conversations(spark, sf_dir):
     t = datagen.transcripts(spark, sf_dir)
     out = recombine_ops.recombine(
-        t, "conv_id", "turn_idx", "text",
+        t, ["conv_id"], "turn_idx", "text",
         is_first_entry=(F.col("role") == "user"),
     )
     return out.select("conv_id", "turn_idx", "combined", "member_count")

@@ -154,10 +154,12 @@ FROM calls c LEFT JOIN ex e USING (window_id, service)
 
 
 def q_tail_sampling(spark, sf_dir):
-    """latency + error policies, probabilistic share = 0 (deterministic)."""
-    out = trace_ops.tail_sample(
-        _spans(spark, sf_dir), latency_threshold_ms=2000, sample_percent=0.0
-    )
+    """error status OR latency >= 2000 ms (deterministic policies only)."""
+    policies = [
+        trace_ops.TailPolicy("status_code", status_codes=["err"]),
+        trace_ops.TailPolicy("latency", threshold_ms=2000),
+    ]
+    out = trace_ops.tail_sample_policies(_spans(spark, sf_dir), policies)
     return out.select("trace_id", "span_id")
 
 

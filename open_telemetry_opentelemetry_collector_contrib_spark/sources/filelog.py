@@ -58,7 +58,7 @@ def read_multiline_logs(
     lines = read_text_logs(spark, path)
     return recombine(
         lines,
-        source_col="file",
+        source_cols=["file"],
         order_col="line_no",
         text_col="line",
         is_first_entry=F.col("line").rlike(line_start_pattern),

@@ -38,7 +38,7 @@ def load_table(
     return spread_scan(df) if spread else df
 
 
-def spread_scan(df: DataFrame, target: int | None = None) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Scale-adaptive scan widening for compute-heavy downstream stages.
 
     A Spark stage's parallelism before the first exchange is bounded by the
@@ -54,9 +54,7 @@ def spread_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     carries >= defaultParallelism splits and this is a no-op — the knob is
     derived from the data, not tuned to either local[32] or a cluster.
     """
-    spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -415,10 +415,10 @@ def _tail_fn_factory(
     samplingPolicyOnTick + decision cache): spans buffer per trace until a
     policy fires; once Sampled, the decision is CACHED — later spans of the
     trace release immediately. Undecided traces never emit (= NotSampled at
-    stream end). Only monotone policies are offered here (latency over
-    threshold, error status, min span count): a decision that is true on a
-    prefix stays true on the full trace, so early release is exactly the
-    batch semantics.
+    stream end). Only monotone policies are offered here (latency at or
+    over threshold, `sampling/latency.go:53-54`; error status; min span
+    count): a decision that is true on a prefix stays true on the full
+    trace, so early release is exactly the batch semantics.
     """
     import json as _json
 
@@ -441,7 +441,7 @@ def _tail_fn_factory(
                 buf.extend(rows.to_dict("records"))
         if not decided:
             hit = (err > 0) or (
-                latency_threshold_ms is not None and mx > latency_threshold_ms
+                latency_threshold_ms is not None and mx >= latency_threshold_ms
             ) or (min_spans is not None and cnt >= min_spans)
             if hit:
                 decided = True

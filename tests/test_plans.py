@@ -216,6 +216,17 @@ def test_otep235_sampler_no_shuffle(spark, tmp_path):
     assert "Exchange" not in tree  # stateless filter: embarrassingly parallel
 
 
+def test_tail_sampling_decides_in_a_window_without_a_join(spark):
+    """The registered tail_sampling query decides per trace in a Window over
+    the one span scan and filters inline; no semi-join re-reads the spans."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.plans import catalog2
+
+    tree = explain(catalog2.q_tail_sampling(spark, SF_UNIT)).split("\n\n")[0]
+    assert "Window" in tree
+    assert "Join" not in tree
+    assert tree.count("Scan parquet") == 1
+
+
 def test_decontamination_broadcasts_benchmark_side(spark, tmp_path):
     """The benchmark gram set must broadcast — corpus grams never shuffle."""
     from open_telemetry_opentelemetry_collector_contrib_spark.functions.text import (

@@ -185,11 +185,49 @@ def test_container_cri_parse_and_partial_recombine(spark):
     assert r1.k8s_container_name == "app" and r1.k8s_restart_count == 3
     assert r1.container_time is not None
 
-    rec = p.recombine_cri_partials(
-        parsed, ["path", "container_stream"], "line_no"
-    ).orderBy("line_no")
-    logs = [r.container_log for r in rec.collect()]
+    logs = [r.container_log for r in _cri_recombine(parsed).collect()]
     assert logs == ["part1-part2-end", "whole"]
+
+
+def _cri_recombine(parsed):
+    """CRI P/F joining through the one recombine operator (parser.go:61)."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.operators.recombine import (
+        recombine,
+    )
+
+    return recombine(
+        parsed, ["path", "container_stream"], "line_no", "container_log",
+        is_last_entry=F.col("container_logtag") == "F",
+        combine_with="", out_col="container_log",
+    ).orderBy("line_no")
+
+
+def test_container_cri_recombine_interleaved_streams(spark):
+    """stdout and stderr interleaved in one file recombine per stream; a
+    trailing P run with no F still emits its partial record."""
+    from open_telemetry_opentelemetry_collector_contrib_spark.operators import parse as p
+
+    path = "/var/log/pods/ns1_pod-a_0000aaaa-1111-2222-3333-444444444444/app/3.log"
+    rows = [
+        (path, 1, "2024-01-01T00:00:00.000000000Z stdout P a1-"),
+        (path, 2, "2024-01-01T00:00:00.050000000Z stderr P e1-"),
+        (path, 3, "2024-01-01T00:00:00.100000000Z stdout F a2"),
+        (path, 4, "2024-01-01T00:00:00.150000000Z stderr F e2"),
+        (path, 5, "2024-01-01T00:00:00.200000000Z stdout P b1-"),
+        (path, 6, "2024-01-01T00:00:00.250000000Z stderr F whole"),
+        (path, 7, "2024-01-01T00:00:00.300000000Z stdout P b2-"),
+    ]
+    parsed = p.parse_container_cri(spark.createDataFrame(rows, ["path", "line_no", "text"]))
+    got = [
+        (r.container_stream, r.line_no, r.container_log)
+        for r in _cri_recombine(parsed).collect()
+    ]
+    assert got == [
+        ("stdout", 1, "a1-a2"),
+        ("stderr", 2, "e1-e2"),
+        ("stdout", 5, "b1-b2-"),
+        ("stderr", 6, "whole"),
+    ]
 
 
 def test_severity_presets_and_custom_ranges(spark):

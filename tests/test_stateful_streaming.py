@@ -208,6 +208,12 @@ def test_streaming_tail_sampling_matches_batch(spark, tmp_path):
                 5000 + t if t % 13 == 5 else 10 + i,
                 base + timedelta(seconds=t, milliseconds=i),
             ))
+    # longest span exactly at the threshold: kept (latency.go:53-54, >=)
+    for i, dur in enumerate([10, 4000]):
+        rows.append((
+            "tr060", f"tr060#{i}", "svc0", "ok", dur,
+            base + timedelta(seconds=60, milliseconds=i),
+        ))
     src = str(tmp_path / "spans_src")
     # 6 files -> spans of one trace may land in different micro-batches
     spark.createDataFrame(rows, TAIL_SPAN_SCHEMA).repartition(6).write.parquet(src)
@@ -243,6 +249,7 @@ def test_streaming_tail_sampling_matches_batch(spark, tmp_path):
         for r in spark.sql("select * from tail_stream").collect()
     }
     assert got == batch_kept and len(got) > 50
+    assert ("tr060", "tr060#1") in got
 
 
 # ---------------------------------------------------------------------------

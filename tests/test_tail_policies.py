@@ -132,38 +132,32 @@ def test_composite_rate_allocation(spark):
 
 
 def test_window_strategy_matches_join_and_single_scan(spark, tmp_path):
-    """'window' strategy = ONE scan/shuffle; decisions identical to 'join'."""
+    """Without a rate policy the window path runs: ONE scan/shuffle, and
+    decisions identical to the join path that a rate policy selects (a
+    zero span budget admits no trace, so it adds nothing to the OR)."""
     policies = [
         TailPolicy("status_code", status_codes=["err"]),
         TailPolicy("latency", threshold_ms=2000),
         TailPolicy("span_count", min_spans=4),
     ]
+    joined_policies = policies + [TailPolicy("rate_limiting", spans_per_second=0)]
     df = _spans(spark)
-    j = {(r.trace_id, r.span_id) for r in tail_sample_policies(df, policies, "join").collect()}
-    w = {(r.trace_id, r.span_id) for r in tail_sample_policies(df, policies, "window").collect()}
+    j = {(r.trace_id, r.span_id) for r in tail_sample_policies(df, joined_policies).collect()}
+    w = {(r.trace_id, r.span_id) for r in tail_sample_policies(df, policies).collect()}
     assert j == w and {t for t, _ in j} == {"A", "B", "D"}
     # plan shape: one scan over a parquet source
     path = str(tmp_path / "spans")
     df.write.parquet(path)
     src = spark.read.parquet(path)
-    plan = (
-        tail_sample_policies(src, policies, "window")
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    )
-    tree = plan.split("\n\n")[0]
-    assert tree.count("Scan parquet") == 1
-    joined = (
-        tail_sample_policies(src, policies, "join")
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    ).split("\n\n")[0]
-    assert joined.count("Scan parquet") == 2  # why 'window' is the default
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        tail_sample_policies(df, [TailPolicy("rate_limiting", spans_per_second=1)], "window")
+    def tree(ps):
+        return (
+            tail_sample_policies(src, ps)
+            ._jdf.queryExecution()
+            .explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
+        ).split("\n\n")[0]
+
+    assert tree(policies).count("Scan parquet") == 1
+    assert tree(joined_policies).count("Scan parquet") == 2  # why rates cost more
