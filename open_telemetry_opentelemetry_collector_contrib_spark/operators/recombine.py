@@ -3,7 +3,7 @@
 Reference semantics (`pkg/stanza/operator/transformer/recombine/config.go:49-62`):
 - a group starts where ``is_first_entry`` matches (or ends where
   ``is_last_entry`` matches), scoped per ``source_identifier`` (one or more
-  columns here: the container parser scopes by file AND stream);
+  columns here: CRI container lines scope by file AND stream);
 - member payloads are joined with ``combine_with`` (default "\\n");
 - max_batch_size / force_flush_period are memory-pressure valves, not
   semantics — irrelevant in batch.
