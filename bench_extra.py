@@ -6,6 +6,9 @@ work: it times individual ``queries()`` entries with the noop sink
 (median of N in-session runs, same methodology as bench.py's per-query
 section, minus the scaling legs) and dumps ``explain("formatted")`` for
 each, so before/after plan evidence can be committed under plans/r06/.
+Each query runs once untimed before its timed reps: a query's first run
+in a JVM pays class loading and JIT warm-up (the first ``tail_sampling``
+run at sf0.1 on ``local[4]`` took 3.3-5.1 s against about 1.1 s warm).
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=4 \
@@ -80,15 +83,17 @@ def main() -> None:
             with open(os.path.join(explain_dir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(plan)
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        runs = []
-        for _ in range(reps):
+
+        def run() -> float:
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-            runs.append(time.perf_counter() - t0)
+            return time.perf_counter() - t0
+
+        run()  # untimed warm-up
+        runs = sorted(run() for _ in range(reps))
         spark.sparkContext.setJobDescription(None)
-        runs.sort()
         med = statistics.median(runs)
         results[name] = round(med, 3)
         print(

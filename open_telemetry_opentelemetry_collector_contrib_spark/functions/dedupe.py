@@ -246,6 +246,8 @@ def minhash_signatures(
     a Catalyst fold (~50x). The signature is num_hashes*8 bytes/doc
     regardless of doc size. base_hash='md5_48' is the oracle-portable
     variant (same int DuckDB computes from md5 hex)."""
+    if base_hash not in ("crc32", "md5_48"):
+        raise ValueError(f"base_hash must be 'crc32' or 'md5_48', not {base_hash!r}")
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedupe import md5_48
+
 # BPE-ish token pieces: word-initial chunks, digits, punctuation runs
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 
@@ -358,8 +360,6 @@ def fingerprint_winnow(
     if base_hash == "xxhash64":
         hashes = F.transform(char_shingles(text, n), lambda s: F.xxhash64(s))
     else:
-        from .dedupe import md5_48
-
         hashes = F.transform(char_shingles(text, n), lambda s: md5_48(s))
     return F.array_min(hashes)
 
@@ -388,10 +388,7 @@ def winnow_fingerprints(
     slice-min, same output. base_hash='md5_48' is the DuckDB-reproducible
     twin used by the oracle-checked catalog query.
     """
-    if base_hash == "xxhash64":
-        hasher = F.xxhash64
-    else:
-        from .dedupe import md5_48 as hasher  # type: ignore[assignment]
+    hasher = F.xxhash64 if base_hash == "xxhash64" else md5_48
 
     def pick(hs: Column) -> Column:
         n_win = F.size(hs) - (w - 1)
@@ -504,8 +501,8 @@ def bloom_bitset(
     the one-row frame broadcasts into the corpus-side join.
     """
     n_words = m_bits // 32
-    h1 = md5_48_of(F.col(gram_col))
-    h2 = md5_48_of(F.concat(F.col(gram_col), F.lit("#2")))
+    h1 = md5_48(F.col(gram_col))
+    h2 = md5_48(F.concat(F.col(gram_col), F.lit("#2")))
     pos = F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(k - 1)),
@@ -545,12 +542,6 @@ def bloom_bitset(
     )
 
 
-def md5_48_of(col: Column) -> Column:
-    from .dedupe import md5_48
-
-    return md5_48(col)
-
-
 def bloom_contains(bloom: Column, gram: Column, m_bits: int, k: int = 2) -> Column:
     """True when all k positions of ``gram`` are set in ``bloom``.
 
@@ -560,8 +551,8 @@ def bloom_contains(bloom: Column, gram: Column, m_bits: int, k: int = 2) -> Colu
     hoisting through a transform-array lambda binding, which forces the
     whole filter onto the interpreted CodegenFallback path (5.4 s vs
     6.4 s median over ~15M grams at sf0.1)."""
-    h1 = md5_48_of(gram)
-    h2 = md5_48_of(F.concat(gram, F.lit("#2"))).bitwiseOR(F.lit(1))
+    h1 = md5_48(gram)
+    h2 = md5_48(F.concat(gram, F.lit("#2"))).bitwiseOR(F.lit(1))
     out = F.lit(True)
     for j in range(k):
         p = F.pmod(h1 + j * h2, F.lit(m_bits))
@@ -968,8 +959,6 @@ def dsir_select(
 
     Output: (doc_id, <target_col>, n_grams, imp_sum_ppm, keep).
     """
-    from .dedupe import md5_48
-
     # portable=True buckets grams with the engine-portable md5-48 hash
     # (oracle-checkable; this is the registered driver query). The
     # production path (portable=False) swaps in JVM-native xxhash64 —

@@ -19,7 +19,7 @@ from ..operators import recombine as recombine_ops
 from ..operators import sample as sample_ops
 from ..operators import transform as transform_ops
 from ..operators.route import Route, with_route_match_all
-from ..sources.tables import load_table
+from ..sources.tables import load_table, spread_scan
 from . import pipeline
 
 _PREFIX = datagen.duckdb_cte_prefix()
@@ -1064,7 +1064,7 @@ def q_otlpjson_explode(spark, sf_dir):
     # spread (r6): 100k from_json parses of ~700 B payloads are the whole
     # cost and run pre-shuffle — a single-row-group input file would pin
     # them to one task (see tables.spread_scan)
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = spread_scan(load_table(spark, sf_dir, "events"))
     ev.createOrReplaceTempView("events")
     body = _OTLP_BODY_SQL.replace("{STR}", "STRING").replace(
         "{EPOCH}", "unix_timestamp(ts)"

@@ -10,7 +10,7 @@ from ..operators import metricstransform as mt
 from ..operators import parse as parse_ops
 from ..operators import redact as redact_ops
 from ..operators import traces as trace_ops
-from ..sources.tables import load_table
+from ..sources.tables import load_table, spread_scan
 from . import pipeline
 from .catalog import _PARSED_CTE, _PREFIX
 
@@ -263,7 +263,7 @@ FROM events GROUP BY 1, 2
 
 
 def _series(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.withColumn("vi", F.floor(F.col("value") * 1000).cast("bigint"))
         .groupBy("user_id", F.col("event_type").alias("metric_name"))
@@ -347,7 +347,7 @@ _SYSLOG_LINE = (
 
 
 def q_syslog_parse(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = spread_scan(load_table(spark, sf_dir, "events"))
     ev.createOrReplaceTempView("events")
     line = _SYSLOG_LINE.replace("{STR}", "STRING")
     df = spark.sql(f"SELECT event_id, {line} AS text FROM events")
@@ -394,7 +394,7 @@ _SYSLOG5424_LINE = (
 
 
 def q_syslog_rfc5424_parse(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = spread_scan(load_table(spark, sf_dir, "events"))
     ev.createOrReplaceTempView("events")
     line = _SYSLOG5424_LINE.replace("{STR}", "STRING").replace(
         "strftime(ts, '%Y-%m-%dT%H:%M:%SZ')", "date_format(ts, 'yyyy-MM-dd\\'T\\'HH:mm:ss\\'Z\\'')"
@@ -432,7 +432,7 @@ def q_schema_translate(spark, sf_dir):
     attribute names translate across schema versions; values untouched."""
     from ..operators import stanza as stanza_ops
 
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     out = stanza_ops.schema_rename(
         ev, {"event_type": "event.name", "user_id": "enduser.id"}
     )
@@ -464,7 +464,7 @@ def q_resource_detect(spark, sf_dir):
     'resolved once at startup' semantic."""
     from ..operators import stanza as stanza_ops
 
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     out = stanza_ops.detect_resource(ev, detectors=["system"])
     return out.select("event_id", "host_name", "os_type")
 
@@ -490,7 +490,7 @@ FROM parsed
 
 
 def q_container_parse(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = spread_scan(load_table(spark, sf_dir, "events"))
     df = ev.select(
         "event_id",
         F.concat(
@@ -524,7 +524,7 @@ FROM lines
 
 
 def q_uri_parse(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = spread_scan(load_table(spark, sf_dir, "events"))
     df = ev.select(
         "event_id",
         F.concat(
@@ -678,7 +678,7 @@ GROUP BY 1, 2, 3, 4
 def q_range_lookup(spark, sf_dir):
     from ..operators.joins import range_lookup
 
-    ev = load_table(spark, sf_dir, "events", spread=True).withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "ip_int", F.pmod(F.col("event_id") * 2654435761, F.lit(100000))
     )
     ranges = spark.range(100).select(
@@ -706,10 +706,10 @@ FROM ev e LEFT JOIN ranges r ON e.ip_int BETWEEN r.start_ip AND r.end_ip
 def q_asof_join(spark, sf_dir):
     from ..operators.joins import asof_join
 
-    ev = load_table(spark, sf_dir, "events", spread=True).select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     # deterministic SCD: every 10th event changes its user's "tier"
     dim = (
-        load_table(spark, sf_dir, "events", spread=True)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 10 == 0)
         .select(
             "user_id",
@@ -802,7 +802,7 @@ def q_metric_context_transform(spark, sf_dir):
     from ..operators.transform import StatementGroup, transform
     from ..sources.tables import load_table
 
-    ev = load_table(spark, sf_dir, "events", spread=True)
+    ev = load_table(spark, sf_dir, "events")
     # deterministic datapoint frame: counters (click/purchase) are
     # monotonic delta SUMs, everything else a GAUGE
     is_sum = F.col("event_type").isin("click", "purchase")

@@ -69,7 +69,7 @@ def q_doc_repetition(spark, sf_dir):
     relationally (unnest + window counts). Scan SPREAD (r6): the
     within-row folds are interpreted HOFs heavy enough that parallelizing
     the single-row-group file wins over the one repartition exchange."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = spread_scan(load_table(spark, sf_dir, "documents"))
     out = text_fns.repetition_signals(docs)
     return out.select(
         "doc_id",
@@ -1055,23 +1055,6 @@ _CUR_JACCARD = 0.8
 
 def q_curation_pipeline(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    # a single-FILE source under-parallelizes the regex-heavy scoring and
-    # the minhash UDF — but only when there is real work to spread: below
-    # ~64 MB the shuffle + extra stage cost more than the compute they
-    # parallelize (the whole pipeline is fixed-cost-dominated there), so the
-    # repartition kicks in only for large single-file inputs. File sizes come
-    # from driver-side metadata — no job.
-    import os as _os
-
-    in_bytes = sum(
-        _os.path.getsize(p.removeprefix("file:")) if p.startswith("file:") else 0
-        for p in docs.inputFiles()
-    )
-    if (
-        in_bytes > 64 * 1024 * 1024
-        and docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    ):
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
     scored = text_fns.quality_signals(docs).withColumn(
         "lang_pred", text_fns.lang_id(F.col("text"))
     )
@@ -2010,7 +1993,7 @@ def q_winnow_fingerprints(spark, sf_dir):
     slice-mins — heavy enough that parallelizing the single-row-group
     input file dominates the one repartition exchange (3.2 s -> 0.8 s at
     sf0.1 on local[32])."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
+    docs = spread_scan(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
         F.explode(

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from open_telemetry_opentelemetry_collector_contrib_spark.plans import pipeline
-from tests.conftest import SF_UNIT
+from tests.conftest import SF_CORRECT, SF_UNIT
 
 
 def explain(df) -> str:
@@ -277,3 +277,40 @@ def test_bucketed_table_aggregation_is_exchange_free(spark, tmp_path):
     )
     assert "Exchange" in explain(plain).split("\n\n")[0]
     spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+# Queries whose scan spread_scan widens: each ran faster widened in at least
+# nine tenths of alternating widened/plain pairs at sf0.1 on local[4] (see
+# tables.spread_scan).
+WIDENED = (
+    "winnow_fingerprints",
+    "syslog_rfc5424_parse",
+    "otlpjson_explode",
+    "decontaminate_bloom",
+    "doc_repetition",
+    "syslog_parse",
+    "container_parse",
+    "decontaminate_docs",
+    "uri_parse",
+)
+# Queries once widened that measured no faster that way, so they scan plainly.
+PLAIN = (
+    "metric_context_transform",
+    "schema_translate",
+    "resource_detect",
+    "asof_join_scd",
+    "range_lookup_geoip",
+    "metrics_calculate",
+    "aggregate_labels",
+    "aggregate_label_values",
+)
+
+
+@pytest.mark.parametrize("name", WIDENED + PLAIN)
+def test_scans_widened_only_where_measured_faster(spark, name):
+    """At sf0.01 every table is one row group, so on the tests' local[8] a
+    widened scan shows as one round-robin repartition and a plain one as none."""
+    import __spark_entry__ as entry_mod
+
+    plan = explain(entry_mod.queries()[name](spark, SF_CORRECT))
+    assert plan.count("RoundRobinPartitioning") == (name in WIDENED)

@@ -16,6 +16,9 @@
   one scoped fan-out cache. A query-path ``persist`` registers its plan in
   the session's CacheManager, so the next identical query in the session
   reads the previous run's cache.
+- A scan is widened one way, ``sources.tables.spread_scan``: only it calls
+  ``getNumPartitions``. A second, private widening rule is one more place
+  to re-measure when the host changes.
 
 The scan reads the syntax tree, so docstrings and comments that name the
 calls are fine.
@@ -39,6 +42,7 @@ FLAGSHIP = (PKG / "plans" / "pipeline.py", None)
 SINKS = (PKG / "sources" / "sinks.py", None)
 WRITE_SINKS = (PKG / "sources" / "sinks.py", "write_sinks")
 CACHE_CALLS = {"persist", "cache", "unpersist"}
+SPREAD_SCAN = (PKG / "sources" / "tables.py", "spread_scan")
 # flagged wherever they are named, not only where they are called
 THREADS = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
 # call name -> the only places it may be called: (file, enclosing top-level
@@ -49,6 +53,7 @@ ALLOWED = {
     **{name: {FLAGSHIP} for name in FLAGSHIP_CALLS},
     **{name: {SINKS} for name in THREADS},
     **{name: {WRITE_SINKS} for name in CACHE_CALLS},
+    "getNumPartitions": {SPREAD_SCAN},
 }
 
 
@@ -184,6 +189,26 @@ def test_scanner_flags_caches_outside_write_sinks():
     ]
 
 
+def test_scanner_flags_scan_widening_outside_spread_scan():
+    src = (
+        "def q(spark, docs):\n"
+        "    '''docs.rdd.getNumPartitions() in a docstring is fine'''\n"
+        "    if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:\n"
+        "        docs = docs.repartition(8)\n"
+        "    return docs\n"
+        "def spread_scan(df):\n"
+        "    return df.rdd.getNumPartitions()\n"
+    )
+    assert banned_calls(src, PKG / "plans" / "training_catalog.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/training_catalog.py:3 getNumPartitions()",
+        "open_telemetry_opentelemetry_collector_contrib_spark/plans/training_catalog.py:7 getNumPartitions()",
+    ]
+    # in tables.py only spread_scan may ask
+    assert banned_calls(src, PKG / "sources" / "tables.py") == [
+        "open_telemetry_opentelemetry_collector_contrib_spark/sources/tables.py:3 getNumPartitions()",
+    ]
+
+
 def test_no_python_row_frames_outside_local_frame():
     assert len(SOURCES) > 50  # the package was found
     hits = offenders(ROW_FRAME_CALLS)
@@ -203,3 +228,8 @@ def test_spark_threads_only_in_sinks():
 def test_caches_only_in_write_sinks():
     hits = offenders(CACHE_CALLS)
     assert hits == [], "share a subtree with sources.tables.materialize: " + ", ".join(hits)
+
+
+def test_scans_widened_only_in_spread_scan():
+    hits = offenders({"getNumPartitions"})
+    assert hits == [], "widen a scan with sources.tables.spread_scan: " + ", ".join(hits)

@@ -45,6 +45,12 @@ def test_minhash_approximates_jaccard(near_dup_docs):
     assert est_14 < 0.3
 
 
+def test_minhash_rejects_unknown_base_hash(near_dup_docs):
+    # xxhash64 is simhash's default name, not a minhash base hash
+    with pytest.raises(ValueError, match="xxhash64"):
+        dedupe.minhash_signatures(near_dup_docs, base_hash="xxhash64")
+
+
 def test_simhash_hamming_ordering(near_dup_docs):
     sh = {r.doc_id: r.simhash for r in dedupe.simhash(near_dup_docs).collect()}
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
