@@ -3,15 +3,17 @@
 The reference's ``ExtractGrokPatterns`` uses elastic/go-grok with its default
 pattern library (`pkg/ottl/ottlfuncs/func_extract_grok_patterns.go:17-22`).
 This module re-implements the %{NAME} / %{NAME:alias} expansion over a core
-subset of the public grok base patterns, producing a plain regex with named
-capture groups that runs JVM-side via regexp_extract (or inside a vectorized
-pandas UDF for single-pass many-group extraction — see
-operators/parse.py:grok_parse_pandas).
+subset of the public grok base patterns, producing a Go-syntax regex with
+named capture groups (read through ``ottl.functions.go_regex``) that runs
+JVM-side via regexp_extract (or inside a vectorized pandas UDF for
+single-pass many-group extraction — see grok_parse_pandas).
 """
 
 from __future__ import annotations
 
 import re
+
+from ..ottl.functions import go_regex
 
 # Core grok base patterns (public logstash/elastic pattern definitions)
 BASE_PATTERNS: dict[str, str] = {
@@ -116,58 +118,37 @@ class GrokError(ValueError):
     pass
 
 
-def _sanitize_name(name: str) -> str:
-    """Java named groups allow only [A-Za-z][A-Za-z0-9]*; grok aliases may
-    contain dots — map them reversibly to a safe token."""
-    return re.sub(r"[^A-Za-z0-9]", "0", name)
-
-
-def grok_expand(
+def grok_to_regex(
     pattern: str,
     named_captures_only: bool = True,
     pattern_definitions: dict[str, str] | None = None,
     _depth: int = 0,
-    _names: dict[str, str] | None = None,
-) -> tuple[str, dict[str, str]]:
-    """Expand %{NAME}/%{NAME:alias}/%{NAME:alias:type} references.
-
-    Returns (regex, {sanitized_group_name: original_alias}) — regex group
-    names must be [A-Za-z0-9]+ for Java, but go-grok ECS aliases carry dots
-    (url.scheme); the map restores the original keys on extraction.
+) -> str:
+    """Expand %{NAME}/%{NAME:alias}/%{NAME:alias:type} references into a
+    Go-syntax regex whose named groups carry the aliases as written
+    (go-grok ECS aliases have dots, e.g. ``url.scheme``); read it through
+    ``ottl.functions.go_regex``, which drops the names for Java and Python.
     """
     if _depth > 20:
         raise GrokError("grok pattern recursion too deep")
     defs = dict(BASE_PATTERNS)
     if pattern_definitions:
         defs.update(pattern_definitions)
-    names: dict[str, str] = {} if _names is None else _names
 
     def repl(m: re.Match) -> str:
         name, alias = m.group(1), m.group(2)
         if name not in defs:
             raise GrokError(f"unknown grok pattern %{{{name}}}")
-        body, _ = grok_expand(
-            defs[name], named_captures_only, pattern_definitions, _depth + 1, names
+        body = grok_to_regex(
+            defs[name], named_captures_only, pattern_definitions, _depth + 1
         )
         if alias:
-            g = _sanitize_name(alias)
-            names[g] = alias
-            return f"(?P<{g}>{body})"
+            return f"(?P<{alias}>{body})"
         if named_captures_only:
             return f"(?:{body})"
-        g = _sanitize_name(name)
-        names[g] = name
-        return f"(?P<{g}>{body})"
+        return f"(?P<{name}>{body})"
 
-    return _GROK_REF.sub(repl, pattern), names
-
-
-def grok_to_regex(
-    pattern: str,
-    named_captures_only: bool = True,
-    pattern_definitions: dict[str, str] | None = None,
-) -> str:
-    return grok_expand(pattern, named_captures_only, pattern_definitions)[0]
+    return _GROK_REF.sub(repl, pattern)
 
 
 def grok_parse_pandas(df, pattern: str, text_col: str = "text", prefix: str = "", **kw):
@@ -184,44 +165,44 @@ def grok_parse_pandas(df, pattern: str, text_col: str = "text", prefix: str = ""
     Returns df + one string column per named group (prefix + group name).
     """
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    regex = grok_to_regex(pattern, **kw)
-    names = re.findall(r"\(\?P<([A-Za-z0-9]+)>", regex)
+    regex, groups = go_regex(grok_to_regex(pattern, **kw))
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [T.StructField(prefix + n, T.StringType()) for n in names]
+        + [T.StructField(prefix + n, T.StringType()) for n in groups]
     )
 
     def batches(it):
         compiled = re.compile(regex)
         for pdf in it:
             extracted = pdf[text_col].str.extract(compiled)
-            extracted.columns = [prefix + n for n in names]
+            extracted = extracted.iloc[:, [i - 1 for i in groups.values()]]
+            extracted.columns = [prefix + n for n in groups]
             yield pd.concat([pdf.reset_index(drop=True), extracted.reset_index(drop=True)], axis=1)
 
     return df.mapInPandas(batches, out_schema)
 
 
-def grok_extract_map_udf(text_col, pattern: str, **kw):
-    """Single-pass grok extraction returning a map<string,string> Column.
+def grok_extract_map_udf(text_col, regex: str):
+    """Single-pass named-group extraction returning a map<string,string>
+    Column, for a regex from ``grok_to_regex``.
 
     One compiled regex match per row inside an Arrow-batched pandas UDF —
     the fast path the OTTL ExtractGrokPatterns converter auto-selects for
     many-group composite patterns, where k JVM-side regexp_extract calls
     re-match the (large) expanded regex k times per row (measured ~3.5x
-    slower at 6 groups). Empty groups are omitted and dotted ECS aliases
-    restored, matching the JVM path exactly.
+    slower at 6 groups). Empty groups are omitted, matching the JVM path
+    exactly.
     """
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    regex, names = grok_expand(pattern, **kw)
+    plain, groups = go_regex(regex)
 
     def batch(s):
-        compiled = re.compile(regex)
+        compiled = re.compile(plain)
         out = []
         for v in s:
             if v is None:
@@ -231,10 +212,7 @@ def grok_extract_map_udf(text_col, pattern: str, **kw):
             if m is None:
                 out.append({})
                 continue
-            d = m.groupdict()
-            out.append(
-                {names.get(k, k): g for k, g in d.items() if g is not None and g != ""}
-            )
+            out.append({n: g for n, i in groups.items() if (g := m.group(i))})
         return pd.Series(out)
 
     udf = F.pandas_udf(batch, T.MapType(T.StringType(), T.StringType()))

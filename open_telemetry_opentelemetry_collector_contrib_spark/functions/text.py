@@ -347,9 +347,7 @@ def char_shingles(text: Column, n: int = 8) -> Column:
     ).otherwise(F.array(text))
 
 
-def fingerprint_winnow(
-    text: Column, n: int = 8, fp_mod: int = 1 << 61, base_hash: str = "xxhash64"
-) -> Column:
+def fingerprint_winnow(text: Column, n: int = 8, base_hash: str = "xxhash64") -> Column:
     """Winnowing-style fingerprint: min hash over char shingles.
 
     Deterministic content fingerprint robust to local edits elsewhere in the

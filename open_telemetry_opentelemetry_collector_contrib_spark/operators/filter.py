@@ -23,8 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ottl import LogContext
-from ..ottl.compiler import compile_conditions_or
+from ..ottl import compile_conditions_or, context_cls
 
 
 def filter_ottl(
@@ -33,18 +32,15 @@ def filter_ottl(
     """Drop rows where ANY OTTL condition is true (OR composition).
 
     NULL-valued conditions keep the row (error_mode=ignore keeps data
-    flowing), hence the explicit coalesce.
+    flowing): ``compile_conditions_or`` reads NULL as false.
 
     ``context`` selects the condition grammar, mirroring filterprocessor's
     signal-specific config blocks (`processor/filterprocessor/config.go`:
     ``logs.log_record``, ``traces.span``/``spanevent``,
     ``metrics.metric``/``datapoint``).
     """
-    from .transform import _context_cls
-
-    ctx = _context_cls(context)(df)
-    drop = compile_conditions_or(drop_conditions, ctx)
-    return df.filter(~F.coalesce(drop, F.lit(False)))
+    ctx = context_cls(context)(df)
+    return df.filter(~compile_conditions_or(drop_conditions, ctx))
 
 
 @dataclass

@@ -50,10 +50,7 @@ def with_route_first_match(
         branches = [F.when(r.condition, F.lit(r.name)) for r in routes]
         return df.withColumn(out_col, F.coalesce(*branches, F.lit(DEFAULT_ROUTE)))
 
-    from ..ottl import LogContext
-    from ..ottl.compiler import compile_bool
-    from ..ottl.functions import call_editor
-    from ..ottl.parser import parse_statement
+    from ..ottl import apply_statement
 
     # snapshot claim decisions BEFORE any mutation runs: a mutation may
     # rewrite columns that route conditions read, and the reference decides
@@ -68,12 +65,7 @@ def with_route_first_match(
         not_earlier = not_earlier & ~matched
     for i, r in enumerate(routes):
         if r.mutation:
-            stmt = parse_statement(r.mutation)
-            ctx = LogContext(df)
-            cond = F.col(f"__claim_{i}")
-            if stmt.where is not None:
-                cond = cond & compile_bool(stmt.where, ctx)
-            df = call_editor(df, stmt.editor, ctx, cond)
+            df = apply_statement(df, r.mutation, gate=F.col(f"__claim_{i}"))
     branches = [
         F.when(F.col(f"__claim_{i}"), F.lit(r.name)) for i, r in enumerate(routes)
     ]

@@ -20,8 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ottl import LogContext
-from ..ottl.compiler import compile_conditions_or
+from ..ottl import LogContext, compile_conditions_or
 from .aggregate import tumbling_window_id
 
 
@@ -53,9 +52,7 @@ def signal_to_metrics(
     per_def = []
     for d in defs:
         matched = (
-            F.coalesce(compile_conditions_or(d.conditions, ctx), F.lit(False))
-            if d.conditions
-            else F.lit(True)
+            compile_conditions_or(d.conditions, ctx) if d.conditions else F.lit(True)
         )
         entries = []
         for k in d.keys:

@@ -25,20 +25,13 @@ vectorized per batch and keeps the name+attributes surgery in one pass.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-@dataclass
-class ToAttributeRule:
-    pattern: str  # Go named-group syntax (?<name>...) or Python (?P<name>...)
-
-    def compiled(self) -> re.Pattern:
-        return re.compile(self.pattern.replace("(?<", "(?P<").replace("(?P<=", "(?<="))
+from ..ottl.functions import go_regex
 
 
 def rename_from_attributes(
@@ -69,12 +62,9 @@ def rename_to_attributes(
     attrs_col: str = "attributes",
 ) -> DataFrame:
     """span.go:158-222 — sequential rule application with {group}
-    placeholder rewrite; unmatched rules leave the row untouched."""
-    compiled = [ToAttributeRule(p).compiled() for p in rules]
-    names = [
-        [n for n, _ in sorted(r.groupindex.items(), key=lambda kv: kv[1])]
-        for r in compiled
-    ]
+    placeholder rewrite; unmatched rules leave the row untouched. Rules
+    are Go regexes, ``(?P<name>...)`` or ``(?<name>...)``."""
+    compiled = [(re.compile(plain), groups) for plain, groups in map(go_regex, rules)]
 
     out_type = T.StructType(
         [
@@ -91,13 +81,12 @@ def rename_to_attributes(
         for name, attrs in zip(name_s, attrs_s):
             attrs = dict(attrs) if attrs is not None else {}
             if name:
-                for rx, group_names in zip(compiled, names):
+                for rx, groups in compiled:
                     m = rx.search(name)
                     if m is None:
                         continue
                     parts, last = [], 0
-                    for gname in group_names:
-                        i = rx.groupindex[gname]
+                    for gname, i in groups.items():
                         sub = m.group(i)
                         attrs[gname] = sub if sub is not None else ""
                         if m.start(i) >= 0:

@@ -176,13 +176,9 @@ def _span_match(p: TailPolicy, spans: DataFrame) -> Column:
         # first-class span grammar (span.kind, status.code enums, end_time
         # math, IsRootSpan) — `tailsamplingprocessor/internal/sampling/
         # ottl.go:31-60` parses these with the span context
-        from ..ottl.compiler import compile_conditions_or
-        from ..ottl.span_context import SpanContext
+        from ..ottl import SpanContext, compile_conditions_or
 
-        ctx = SpanContext(spans)
-        return F.coalesce(
-            compile_conditions_or(p.span_conditions, ctx), F.lit(False)
-        )
+        return compile_conditions_or(p.span_conditions, SpanContext(spans))
     raise ValueError(f"not a span-scoped policy: {p.type}")
 
 

@@ -21,13 +21,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..ottl import LogContext
-from ..ottl.ast import Statement
-from ..ottl.compiler import compile_bool, compile_conditions_or
-from ..ottl.functions import call_editor
-from ..ottl.parser import parse_statement
+from ..ottl import apply_statement, compile_conditions_or, context_cls
 
 
 @dataclass
@@ -37,40 +32,12 @@ class StatementGroup:
     context: str = "log"
 
 
-def _context_cls(name: str) -> type:
-    """transformprocessor context table (`config.go:34-60`): trace/span
-    statements get the span path grammar, metric/datapoint statements the
-    metric path grammar; log/resource/scope collapse to row-level ops on
-    the denormalized frame."""
-    if name in ("span", "trace"):
-        from ..ottl.span_context import SpanContext
-
-        return SpanContext
-    if name == "spanevent":
-        from ..ottl.span_context import SpanEventContext
-
-        return SpanEventContext
-    if name in ("metric", "datapoint"):
-        from ..ottl.metric_context import DataPointContext
-
-        return DataPointContext
-    return LogContext
-
-
 def apply_group(df: DataFrame, group: StatementGroup) -> DataFrame:
-    cls = _context_cls(group.context)
+    cls = context_cls(group.context)
     for src in group.statements:
-        stmt: Statement = parse_statement(src)
-        ctx = cls(df)
-        cond = None
-        if group.conditions:
-            cond = F.coalesce(
-                compile_conditions_or(group.conditions, ctx), F.lit(False)
-            )
-        if stmt.where is not None:
-            where = compile_bool(stmt.where, ctx)
-            cond = where if cond is None else (cond & where)
-        df = call_editor(df, stmt.editor, ctx, cond)
+        # the group gate is compiled against each statement's input frame
+        gate = compile_conditions_or(group.conditions, cls(df)) if group.conditions else None
+        df = apply_statement(df, src, cls, gate)
     return df
 
 

@@ -363,11 +363,12 @@ def compile_condition(src: str, ctx: LogContext) -> Column:
 
 def compile_conditions_or(sources: list[str], ctx: LogContext) -> Column:
     """OR-composed condition list (filterottl.NewBoolExprForLog,
-    `internal/filter/filterottl/functions.go:51-53`)."""
+    `internal/filter/filterottl/functions.go:51-53`), NULL read as false:
+    a row whose conditions error out matches none (error_mode=ignore)."""
     out = compile_condition(sources[0], ctx)
     for s in sources[1:]:
         out = out | compile_condition(s, ctx)
-    return out
+    return F.coalesce(out, F.lit(False))
 
 
 # ---------------------------------------------------------------------------
@@ -375,12 +376,23 @@ def compile_conditions_or(sources: list[str], ctx: LogContext) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def apply_statement(df: DataFrame, src: str, ctx_cls: type = LogContext) -> DataFrame:
+def apply_statement(
+    df: DataFrame,
+    src: str,
+    ctx_cls: type = LogContext,
+    gate: Column | None = None,
+) -> DataFrame:
+    """Run one statement: its editor changes only the rows where ``gate``
+    (a boolean Column over ``df``, e.g. a transform group's conditions or a
+    route's claim) and the statement's ``where`` both hold."""
     from . import functions as fnlib
 
     stmt: Statement = parse_statement(src) if isinstance(src, str) else src
     ctx = ctx_cls(df)
-    cond = compile_bool(stmt.where, ctx) if stmt.where is not None else None
+    cond = gate
+    if stmt.where is not None:
+        where = compile_bool(stmt.where, ctx)
+        cond = where if cond is None else (cond & where)
     return fnlib.call_editor(df, stmt.editor, ctx, cond)
 
 

@@ -166,62 +166,88 @@ def strptime_to_java(fmt: str) -> str:
     return "".join(out)
 
 
-_NAMED_GROUP_RE = re.compile(r"\(\?P?<([a-zA-Z_][a-zA-Z0-9_]*)>")
+def go_regex(pattern: str) -> tuple[str, dict[str, int]]:
+    """Go (RE2) regex -> (the same regex with its group names removed,
+    {group name: 1-based capture-group index}).
 
-
-def _to_java_regex(pattern: str) -> str:
-    """Go (RE2) named groups (?P<n>...) -> Java (?<n>...)."""
-    return pattern.replace("(?P<", "(?<")
-
-
-def _capture_group_indexes(pattern: str) -> dict[str, int]:
-    """{group name: 1-based index among capture groups}, matching Java's
-    count — skips escaped parens, parens inside character classes, and
-    non-capturing / lookaround constructs."""
-    idx: dict[str, int] = {}
-    gi = 0
+    Go names a group ``(?P<name>...)`` or ``(?<name>...)``. Java rejects
+    ``_`` in group names and Python the ``(?<name>...)`` form, so the names
+    are dropped and callers read groups by index, which both engines count
+    like Go: escaped parens, parens inside character classes and
+    ``(?:...)``/flag/lookaround groups do not count. A name may hold any
+    character but ``>`` (grok aliases carry dots); a repeated name maps to
+    its last group.
+    """
+    named = re.compile(r"\(\?P?<([^>=!][^>]*)>")
+    out: list[str] = []
+    groups: dict[str, int] = {}
+    count = 0
     i = 0
     in_class = False
-    named = re.compile(r"\(\?P?<([a-zA-Z_][a-zA-Z0-9_]*)>")
     while i < len(pattern):
         c = pattern[i]
         if c == "\\":
+            out.append(pattern[i : i + 2])
             i += 2
             continue
         if in_class:
-            if c == "]":
-                in_class = False
-            i += 1
-            continue
-        if c == "[":
+            in_class = c != "]"
+        elif c == "[":
             in_class = True
-            i += 1
-            continue
-        if c == "(":
-            if pattern.startswith("(?", i):
-                m = named.match(pattern, i)
-                if m:
-                    gi += 1
-                    idx[m.group(1)] = gi
-                # other (?...) forms are non-capturing or lookaround
-            else:
-                gi += 1
+        elif c == "(":
+            m = named.match(pattern, i)
+            if m:
+                count += 1
+                groups[m.group(1)] = count
+                out.append("(")
+                i = m.end()
+                continue
+            if not pattern.startswith("(?", i):
+                count += 1
+        out.append(c)
         i += 1
-    return idx
+    return "".join(out), groups
 
 
-def extract_patterns_cols(text: Column, pattern: str) -> dict[str, Column]:
-    """Named capture groups -> {name: extracted col} using group indexes.
+_GO_TEMPLATE_TOKEN = re.compile(r"\\|\$(?:\$|\{([A-Za-z0-9_]+)\}([0-9]?)|([A-Za-z0-9_]+))?")
+
+
+def go_replacement(template: str, groups: dict[str, int]) -> str:
+    """Go ``Regexp.Expand`` replacement template -> Java replacement, for a
+    pattern translated by ``go_regex``: ``$name``, ``${name}`` and ``$n``
+    become ``$<index>`` (an unknown name expands to nothing, as in Go),
+    ``$$`` and a ``$`` that starts no reference are a literal ``$``, and
+    Java's escape character ``\\`` is escaped."""
+
+    def token(m: re.Match) -> str:
+        name = m.group(1) or m.group(3)
+        if m.group(0) == "\\":
+            return "\\\\"
+        if name is None:
+            return "\\$"
+        idx = int(name) if name.isdigit() else groups.get(name)
+        # a digit right after ${name} is text, not part of the Java ref
+        after = "\\" + m.group(2) if m.group(2) else ""
+        return (f"${idx}" if idx is not None else "") + after
+
+    return _GO_TEMPLATE_TOKEN.sub(token, template)
+
+
+def _extract_map(text: Column, pattern: str) -> TypedCol:
+    """Named capture groups -> map of the non-empty ones, read by group index.
 
     Stays JVM-side (one regexp_extract per group); Catalyst subexpression
     elimination shares the match work within a projection.
     """
-    names = _NAMED_GROUP_RE.findall(pattern)
-    if not names:
+    plain, groups = go_regex(pattern)
+    if not groups:
         raise OTTLCompileError("ExtractPatterns requires named capture groups")
-    idx = _capture_group_indexes(pattern)
-    jpat = _to_java_regex(pattern)
-    return {n: F.regexp_extract(text, jpat, idx[n]) for n in names}
+    entries = []
+    for n, i in groups.items():
+        c = F.regexp_extract(text, plain, i)
+        entries.append(F.when(c != "", F.struct(F.lit(n).alias("key"), c.alias("value"))))
+    arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
+    return TypedCol(F.map_from_entries(arr), "map")
 
 
 # ---------------------------------------------------------------------------
@@ -312,18 +338,12 @@ def call_converter(call: FuncCall, ctx: LogContext) -> TypedCol:
         return TypedCol(F.log(val(0).col.cast("double")), "float")
     if name == "IsMatch":
         pattern = _lit_of(args[1], "IsMatch pattern")
-        return TypedCol(val(0).col.cast("string").rlike(_to_java_regex(pattern)), "bool")
+        return TypedCol(val(0).col.cast("string").rlike(go_regex(pattern)[0]), "bool")
     if name == "ExtractPatterns":
         pattern = _lit_of(args[1], "ExtractPatterns pattern")
-        cols = extract_patterns_cols(val(0).col.cast("string"), pattern)
-        entries = [
-            F.when(c != "", F.struct(F.lit(n).alias("key"), c.alias("value")))
-            for n, c in cols.items()
-        ]
-        arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
-        return TypedCol(F.map_from_entries(arr), "map")
+        return _extract_map(val(0).col.cast("string"), pattern)
     if name == "ExtractGrokPatterns":
-        from ..functions.grok import grok_expand
+        from ..functions.grok import grok_extract_map_udf, grok_to_regex
 
         pattern = _lit_of(args[1], "grok pattern")
         only_named = bool(named.get("namedCapturesOnly", Literal(True, "bool")).value) if isinstance(named.get("namedCapturesOnly"), Literal) else True
@@ -343,30 +363,15 @@ def call_converter(call: FuncCall, ctx: LogContext) -> TypedCol:
                     raise OTTLCompileError(f"bad pattern definition {raw!r}")
                 k, v = raw.split("=", 1)
                 defs[k] = v
-        regex, alias_names = grok_expand(
+        regex = grok_to_regex(
             pattern, named_captures_only=only_named, pattern_definitions=defs
         )
-        if len(alias_names) >= 4:
+        text = val(0).col.cast("string")
+        if len(go_regex(regex)[1]) >= 4:
             # composite patterns: k regexp_extract calls re-match the big
             # expanded regex k times per row; one Arrow-batched match wins
-            from ..functions.grok import grok_extract_map_udf
-
-            return TypedCol(
-                grok_extract_map_udf(
-                    val(0).col.cast("string"), pattern,
-                    named_captures_only=only_named,
-                    pattern_definitions=defs,
-                ),
-                "map",
-            )
-        cols = extract_patterns_cols(val(0).col.cast("string"), regex)
-        entries = [
-            # restore original (possibly dotted ECS) alias names
-            F.when(c != "", F.struct(F.lit(alias_names.get(n, n)).alias("key"), c.alias("value")))
-            for n, c in cols.items()
-        ]
-        arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
-        return TypedCol(F.map_from_entries(arr), "map")
+            return TypedCol(grok_extract_map_udf(text, regex), "map")
+        return _extract_map(text, regex)
     if name == "ParseJSON":
         return TypedCol(F.from_json(val(0).col, "map<string,string>"), "map")
     if name == "ParseKeyValue":
@@ -793,10 +798,10 @@ def call_editor(df: DataFrame, call: FuncCall, ctx: LogContext, cond: Column | N
                 k = _lit_of(args[1], "key")
                 new = F.map_filter(m, lambda mk, _: mk != k)
             elif name == "delete_matching_keys":
-                pat = _to_java_regex(_lit_of(args[1], "pattern"))
+                pat = go_regex(_lit_of(args[1], "pattern"))[0]
                 new = F.map_filter(m, lambda mk, _: ~mk.rlike(pat))
             elif name == "keep_matching_keys":
-                pat = _to_java_regex(_lit_of(args[1], "pattern"))
+                pat = go_regex(_lit_of(args[1], "pattern"))[0]
                 new = F.map_filter(m, lambda mk, _: mk.rlike(pat))
             else:  # keep_keys
                 keys = [compile_value(a, ctx).col for a in args[1].args]
@@ -817,7 +822,7 @@ def call_editor(df: DataFrame, call: FuncCall, ctx: LogContext, cond: Column | N
         tc = ctx.resolve(target)
         old = tc.col
         if name == "replace_pattern":
-            pat = _to_java_regex(_lit_of(args[1], "pattern"))
+            pat, groups = go_regex(_lit_of(args[1], "pattern"))
             repl = _lit_of(args[2], "replacement")
             fn_name = None
             fmt = None
@@ -864,7 +869,7 @@ def call_editor(df: DataFrame, call: FuncCall, ctx: LogContext, cond: Column | N
                     repl_col = F.format_string(fmt, repl_col)
                 new = F.regexp_replace(old, F.lit(pat), repl_col)
             else:
-                new = F.regexp_replace(old, pat, repl)
+                new = F.regexp_replace(old, pat, go_replacement(repl, groups))
         else:
             glob = _lit_of(args[1], "glob")
             repl = _lit_of(args[2], "replacement")
@@ -887,8 +892,8 @@ def call_editor(df: DataFrame, call: FuncCall, ctx: LogContext, cond: Column | N
             new = F.transform_values(m, lambda _, v: F.when(v.like(glob), F.lit(repl)).otherwise(v))
         else:
             mode = _lit_of(args[1], "mode")
-            pat = _to_java_regex(_lit_of(args[2], "pattern"))
-            repl = _lit_of(args[3], "replacement")
+            pat, groups = go_regex(_lit_of(args[2], "pattern"))
+            repl = go_replacement(_lit_of(args[3], "replacement"), groups)
             if mode == "value":
                 new = F.transform_values(m, lambda _, v: F.regexp_replace(v, pat, repl))
             else:

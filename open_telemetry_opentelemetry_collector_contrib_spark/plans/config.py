@@ -45,6 +45,7 @@ from ..operators import sample as sample_ops
 from ..operators import transform as transform_ops
 from ..operators.aggregate import windowed_count, windowed_sum
 from ..operators.route import Route, with_route_first_match, with_route_match_all
+from ..ottl.functions import go_regex
 from ..ottl.parser import parse_condition, parse_statement
 from ..sources.tables import local_frame
 
@@ -145,31 +146,6 @@ def _otlpjson(spark, df, cfg):
     )
 
 
-@stage("syslog")
-def _syslog(spark, df, cfg):
-    from ..operators import parse as parse_ops
-
-    proto = cfg.get("protocol", "rfc3164")
-    if proto == "rfc5424":
-        return parse_ops.parse_syslog_rfc5424(df, cfg.get("text_col", "text"))
-    return parse_ops.parse_syslog_rfc3164(df, cfg.get("text_col", "text"))
-
-
-@stage("severity")
-def _severity(spark, df, cfg):
-    from pyspark.sql import functions as F
-
-    from ..operators import parse as parse_ops
-
-    mapping = parse_ops.severity_mapping(
-        cfg.get("preset", "default"), cfg.get("mapping")
-    )
-    return df.withColumn(
-        cfg.get("out_col", "severity_number"),
-        parse_ops.severity_number(F.col(cfg["parse_from"]), mapping),
-    )
-
-
 @stage("trace_parser")
 def _trace_parser(spark, df, cfg):
     from ..operators import parse as parse_ops
@@ -240,21 +216,16 @@ def _embedded_parsers(df, op):
 
 @_stanza_op("regex_parser")
 def _st_regex(spark, df, op):
-    """Named-capture regex parse: each Go `(?P<name>…)` group becomes a
-    column (`pkg/stanza/operator/parser/regex/parser.go:46-63`); rows the
-    pattern misses get NULL fields (on_error=send)."""
+    """Named-capture regex parse: each Go `(?P<name>…)`/`(?<name>…)` group
+    becomes a column (`pkg/stanza/operator/parser/regex/parser.go:46-63`);
+    rows the pattern misses get NULL fields (on_error=send)."""
     from pyspark.sql import functions as F
 
-    pattern = op["regex"]
-    rx = re.compile(pattern)
-    # extraction is by group index, so strip the Go/Python group names for
-    # the JVM (Java group names also reject '_', which stanza names use)
-    java_pattern = re.sub(r"\(\?P<[^>]+>", "(", pattern)
+    plain, groups = go_regex(op["regex"])
     src = F.col(_field(op.get("parse_from", "text")))
-    for gname, gidx in sorted(rx.groupindex.items(), key=lambda kv: kv[1]):
+    for gname, gidx in groups.items():
         df = df.withColumn(
-            gname,
-            F.nullif(F.regexp_extract(src, java_pattern, gidx), F.lit("")),
+            gname, F.nullif(F.regexp_extract(src, plain, gidx), F.lit(""))
         )
     return _embedded_parsers(df, op)
 
@@ -400,7 +371,7 @@ def validate(spec: dict) -> None:
                             f"unknown stanza operator {op.get('type')!r}"
                         )
                     if "regex" in op:
-                        re.compile(op["regex"])
+                        re.compile(go_regex(op["regex"])[0])
                     sev = op.get("severity") or (
                         op if op["type"] == "severity_parser" else None
                     )

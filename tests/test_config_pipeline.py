@@ -104,8 +104,9 @@ def test_match_all_route_duplicates(spark):
 
 
 def test_config_new_stage_types(spark):
-    """Round-2 stage registry additions: syslog(rfc5424), severity,
-    otep235 sampler, tail_sampling, request-context routing."""
+    """Round-2 stage registry additions: logstransform syslog_parser
+    (rfc5424) and severity_parser, otep235 sampler, tail_sampling,
+    request-context routing."""
     from open_telemetry_opentelemetry_collector_contrib_spark.plans import config as cfg
 
     line = '<165>1 2024-01-01T00:00:00Z host app 7 ID1 [x@1 k="v"] hello'
@@ -114,9 +115,11 @@ def test_config_new_stage_types(spark):
     )
     spec = {
         "processors": [
-            {"type": "syslog", "protocol": "rfc5424"},
-            {"type": "severity", "parse_from": "syslog_msgid", "preset": "none",
-             "mapping": {"info": ["id1"]}},
+            {"type": "logstransform", "operators": [
+                {"type": "syslog_parser", "protocol": "rfc5424"},
+                {"type": "severity_parser", "parse_from": "syslog_msgid",
+                 "preset": "none", "mapping": {"info": ["id1"]}},
+            ]},
         ],
         "route": {
             "table": [
@@ -223,6 +226,19 @@ def test_logstransform_stanza_chain(spark):
         cfg.validate({"processors": [{"type": "logstransform",
                                       "operators": [{"type": "regex_parser",
                                                      "regex": "(?P<bad"}]}]})
+
+
+def test_regex_parser_reads_both_go_group_forms(spark):
+    """Go names a group ``(?P<name>…)`` or ``(?<name>…)``; regex_parser
+    takes both, and names with ``_``."""
+    src = spark.createDataFrame([("ERROR lat=42",)], ["text"])
+    spec = {"processors": [{"type": "logstransform", "operators": [
+        {"type": "regex_parser",
+         "regex": r"^(?<level>[A-Z]+) lat=(?P<latency_ms>[0-9]+)"},
+    ]}]}
+    cfg.validate(spec)
+    r = cfg.build(spark, spec, src).collect()[0]
+    assert (r.level, r.latency_ms) == ("ERROR", "42")
 
 
 def test_lookup_stage_joins_local_dimension(spark, tmp_path):

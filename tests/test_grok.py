@@ -44,6 +44,21 @@ def test_pandas_path_matches_native_path(spark):
         assert pandas_out[k] == v, k
 
 
+@pytest.mark.parametrize(
+    "pattern,expected",
+    [
+        ("%{WORD:a_b} %{WORD:a.b}", {"a_b": "w", "a.b": "x"}),
+        # four groups: the Arrow-batched single-match path
+        ("%{WORD:a_b} %{WORD:a.b} %{WORD:c} %{WORD:d}",
+         {"a_b": "w", "a.b": "x", "c": "y", "d": "z"}),
+    ],
+)
+def test_aliases_differing_in_punctuation_keep_their_groups(spark, pattern, expected):
+    df = spark.createDataFrame([("w x y z",)], ["text"])
+    out = apply_statement(df, f'set(m, ExtractGrokPatterns(text, "{pattern}"))')
+    assert out.collect()[0].m == expected
+
+
 def test_unknown_pattern_raises():
     with pytest.raises(grok.GrokError, match="unknown grok pattern"):
         grok.grok_to_regex("%{NOPE:x}")

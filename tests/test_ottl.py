@@ -178,6 +178,51 @@ def test_replace_pattern(logs):
     assert one(df, "c2").http_method == "post"
 
 
+@pytest.mark.parametrize(
+    "replacement,expected",
+    [
+        ("n${num_id}", "n42 n7"),
+        ("n$num_id", "n42 n7"),
+        ("[$1]", "[42] [7]"),
+        # a digit after ${name} is text; $$ is a literal $
+        ("${num_id}0", "420 70"),
+        ("$$${num_id}", "$42 $7"),
+        # an unknown name expands to nothing (Go Regexp.Expand)
+        ("$nope-", "- -"),
+        # a backslash is text in Go and the escape character in Java
+        ("a\\\\b", "a\\b a\\b"),
+    ],
+)
+def test_replace_pattern_group_refs(spark, replacement, expected):
+    """Go replacement templates: ``$name``/``${name}`` refer to named
+    groups, whose names Java would reject (``_``)."""
+    df = spark.createDataFrame([("id=42 id=7",)], ["msg"])
+    out = apply_statement(
+        df, f'replace_pattern(msg, "id=(?P<num_id>[0-9]+)", "{replacement}")'
+    )
+    assert out.collect()[0].msg == expected
+
+
+@pytest.mark.parametrize(
+    "pattern,plain,groups",
+    [
+        (r"lat=(?P<latency_ms>[0-9]+)", r"lat=([0-9]+)", {"latency_ms": 1}),
+        (r"(?<a>x)(y)(?P<b>z)", r"(x)(y)(z)", {"a": 1, "b": 3}),
+        # escaped parens, parens in a class, non-capturing and lookaround
+        # groups are not counted
+        (r"\((?:a)[(](?<=b)(?<!c)(?P<d>e)", r"\((?:a)[(](?<=b)(?<!c)(e)", {"d": 1}),
+        (r"[\]()](?P<e>f)", r"[\]()](f)", {"e": 1}),
+        # grok aliases: any name without '>'; a repeated name keeps its last group
+        (r"(?P<url.scheme>a)(?P<x>b)(?P<x>c)", r"(a)(b)(c)", {"url.scheme": 1, "x": 3}),
+        (r"no groups", r"no groups", {}),
+    ],
+)
+def test_go_regex(pattern, plain, groups):
+    from open_telemetry_opentelemetry_collector_contrib_spark.ottl.functions import go_regex
+
+    assert go_regex(pattern) == (plain, groups)
+
+
 def test_replace_match_glob(logs):
     df = apply_statement(logs, 'replace_match(http_url, "http://localhost*", "local")')
     assert one(df).http_url == "local"
@@ -260,6 +305,9 @@ def test_merge_maps_upsert(logs):
         ('ParseJSON("{\\"k\\": 87}")["k"]', "87"),
         ('ParseCSV("a,b,c", "f1,f2,f3")["f2"]', "b"),
         ('ExtractPatterns(http_url, "://(?P<host>[^:/]+)")["host"]', "localhost"),
+        # Java rejects '_' in group names; groups are read by index
+        ('ExtractPatterns("lat=42", "lat=(?P<latency_ms>[0-9]+)")["latency_ms"]', "42"),
+        ('IsMatch("lat=42", "lat=(?P<latency_ms>[0-9]+)")', True),
         ('ExtractGrokPatterns("user alice id 42", "user %{WORD:user} id %{INT:id}")["id"]', "42"),
         ('ExtractGrokPatterns("at 10.1.2.3 ok", "at %{IP:ip} ok")["ip"]', "10.1.2.3"),
         ('URL(http_url)["url.domain"]', "localhost"),

@@ -19,6 +19,14 @@
 - A scan is widened one way, ``sources.tables.spread_scan``: only it calls
   ``getNumPartitions``. A second, private widening rule is one more place
   to re-measure when the host changes.
+- OTTL statements compile in one place: only ``ottl/`` calls
+  ``call_editor``; transform groups and route mutations go through
+  ``ottl.apply_statement``.
+- Go named groups are read in one place, ``ottl.functions.go_regex``: only
+  it reads ``.groupindex`` or matches regex group syntax (a string with an
+  escaped ``\\(\\?``, or a ``.replace()`` of a ``(?`` opener). Split
+  translators drift: one rejected ``(?<name>…)``, one handed Java a group
+  name with ``_``, one merged the aliases ``a_b`` and ``a.b``.
 
 The scan reads the syntax tree, so docstrings and comments that name the
 calls are fine.
@@ -43,6 +51,10 @@ SINKS = (PKG / "sources" / "sinks.py", None)
 WRITE_SINKS = (PKG / "sources" / "sinks.py", "write_sinks")
 CACHE_CALLS = {"persist", "cache", "unpersist"}
 SPREAD_SCAN = (PKG / "sources" / "tables.py", "spread_scan")
+OTTL = {(p, None) for p in (PKG / "ottl").glob("*.py")}
+GO_REGEX = (PKG / "ottl" / "functions.py", "go_regex")
+# not calls: an attribute read, and a string that reads regex group syntax
+GO_GROUPS = {"groupindex", "group-syntax"}
 # flagged wherever they are named, not only where they are called
 THREADS = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
 # call name -> the only places it may be called: (file, enclosing top-level
@@ -54,7 +66,10 @@ ALLOWED = {
     **{name: {SINKS} for name in THREADS},
     **{name: {WRITE_SINKS} for name in CACHE_CALLS},
     "getNumPartitions": {SPREAD_SCAN},
+    "call_editor": OTTL,
+    **{name: {GO_REGEX} for name in GO_GROUPS},
 }
+CALLS = ALLOWED.keys() - THREADS - GO_GROUPS
 
 
 class _RuledCalls(ast.NodeVisitor):
@@ -75,16 +90,29 @@ class _RuledCalls(ast.NodeVisitor):
     def visit_Call(self, node):
         f = node.func
         name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        if name in ALLOWED.keys() - THREADS:
+        if name in CALLS:
             self._found(node, f"{name}()")
+        if name == "replace" and any(
+            isinstance(a, ast.Constant) and "(?" in str(a.value) for a in node.args
+        ):
+            self._found(node, "group-syntax")
         self.generic_visit(node)
+
+    def visit_Expr(self, node):
+        # a bare string statement is a docstring
+        if not isinstance(node.value, ast.Constant):
+            self.generic_visit(node)
+
+    def visit_Constant(self, node):
+        if isinstance(node.value, str) and r"\(\?" in node.value:
+            self._found(node, "group-syntax")
 
     def visit_Name(self, node):
         if node.id in THREADS:
             self._found(node, node.id)
 
     def visit_Attribute(self, node):
-        if node.attr in THREADS:
+        if node.attr in THREADS | {"groupindex"}:
             self._found(node, node.attr)
         self.generic_visit(node)
 
@@ -209,6 +237,35 @@ def test_scanner_flags_scan_widening_outside_spread_scan():
     ]
 
 
+def test_scanner_flags_statements_and_go_groups_outside_ottl():
+    src = (
+        "import re\n"
+        "def parse(df, op, ctx, pattern):\n"
+        "    r'''rx.groupindex and \\(\\?P< in a docstring are fine'''\n"
+        "    rx = re.compile(pattern.replace('(?<', '(?P<'))\n"
+        "    plain = re.sub(r'\\(\\?P<[^>]+>', '(', pattern)\n"
+        "    return fnlib.call_editor(df, op, ctx, None), rx.groupindex\n"
+        "def go_regex(pattern):\n"
+        "    return re.compile(r'\\(\\?P?<([^>]+)>').match(pattern).re.groupindex\n"
+    )
+    config = "open_telemetry_opentelemetry_collector_contrib_spark/plans/config.py"
+    assert banned_calls(src, PKG / "plans" / "config.py") == [
+        f"{config}:4 group-syntax",
+        f"{config}:5 group-syntax",
+        f"{config}:6 call_editor()",
+        f"{config}:6 groupindex",
+        f"{config}:8 groupindex",
+        f"{config}:8 group-syntax",
+    ]
+    # any ottl/ file may apply a statement; only go_regex reads group names
+    functions = "open_telemetry_opentelemetry_collector_contrib_spark/ottl/functions.py"
+    assert banned_calls(src, PKG / "ottl" / "functions.py") == [
+        f"{functions}:4 group-syntax",
+        f"{functions}:5 group-syntax",
+        f"{functions}:6 groupindex",
+    ]
+
+
 def test_no_python_row_frames_outside_local_frame():
     assert len(SOURCES) > 50  # the package was found
     hits = offenders(ROW_FRAME_CALLS)
@@ -233,3 +290,13 @@ def test_caches_only_in_write_sinks():
 def test_scans_widened_only_in_spread_scan():
     hits = offenders({"getNumPartitions"})
     assert hits == [], "widen a scan with sources.tables.spread_scan: " + ", ".join(hits)
+
+
+def test_statements_compiled_only_in_ottl():
+    hits = offenders({"call_editor"})
+    assert hits == [], "apply a statement with ottl.apply_statement: " + ", ".join(hits)
+
+
+def test_go_groups_read_only_in_go_regex():
+    hits = offenders(GO_GROUPS)
+    assert hits == [], "translate a Go regex with ottl.functions.go_regex: " + ", ".join(hits)
